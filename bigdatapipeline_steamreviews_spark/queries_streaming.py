@@ -27,6 +27,7 @@ from .streaming.summarizer import (
     events_file_stream,
     run_to_memory_table,
     stage_events_for_replay,
+    stream_start_conf,
     streaming_daily_summary,
 )
 
@@ -2305,9 +2306,7 @@ def stream_pyds_serving_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = streaming_daily_summary(stream, watermark=None)
     store_dir = tempfile.mkdtemp(prefix="spark_graft_pyds_store_")
     checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with stream_start_conf(spark, checkpoint, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             result.writeStream.format("servingstore")
             .outputMode("complete")
@@ -2318,6 +2317,4 @@ def stream_pyds_serving_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return read_serving_store(spark, store_dir)

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..streaming.summarizer import stream_start_conf
+
 __all__ = [
     "read_kafka_stream",
     "parse_json_values",
@@ -72,13 +74,20 @@ def write_kafka_stream(
     key_col: str | None = None,
 ):
     """S5 — Kafka streaming sink in update mode with checkpoint
-    (summarizer.py:103-111).  Returns the started StreamingQuery."""
+    (summarizer.py:103-111).  Returns the started StreamingQuery.
+
+    The checkpoint file manager is scoped to ``start()`` only (see
+    ``streaming.summarizer.stream_start_conf``): the offset and commit
+    logs and the state store follow the path's choice, while the
+    source's own offset log, built on the stream thread after ``start()``
+    returns, may use Spark's default — correct either way."""
     out = encode_json_output(df, key_col) if key_col else df
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .start()
-    )
+    with stream_start_conf(out.sparkSession, checkpoint_dir):
+        return (
+            out.writeStream.format("kafka")
+            .option("kafka.bootstrap.servers", bootstrap_servers)
+            .option("topic", topic)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode(output_mode)
+            .start()
+        )

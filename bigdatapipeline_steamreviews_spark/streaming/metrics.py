@@ -137,6 +137,29 @@ def observation_result(obs, exprs: list[Column]) -> dict:
         return metric_identity_values(exprs)
 
 
+class _ProgressJsonBridge:
+    """The py4j callback object behind :class:`StreamMetricsListener`:
+    hands each progress event's JSON string over in one JVM call."""
+
+    def __init__(self, listener: "StreamMetricsListener"):
+        self.listener = listener
+
+    def onQueryStarted(self, jevent) -> None:  # noqa: D102
+        pass
+
+    def onQueryProgress(self, jevent) -> None:  # noqa: D102
+        self.listener._add_progress_json(jevent.progress().json())
+
+    def onQueryIdle(self, jevent) -> None:  # noqa: D102
+        pass
+
+    def onQueryTerminated(self, jevent) -> None:  # noqa: D102
+        self.listener._terminated.set()
+
+    class Java:
+        implements = ["org.apache.spark.sql.streaming.PythonStreamingQueryListener"]
+
+
 class StreamMetricsListener(StreamingQueryListener):
     """Captures per-micro-batch progress for one named streaming query:
     observed metrics (from ``df.observe``) and state-operator counters.
@@ -146,21 +169,48 @@ class StreamMetricsListener(StreamingQueryListener):
     final progress event has been delivered.  ``wait_terminated()``
     blocks on the QueryTerminated event, which the bus delivers after
     every progress event for that query, making the captured list
-    complete and deterministic."""
+    complete and deterministic.
+
+    Each progress is kept as ``json.loads`` of the event's JSON, which is
+    the JVM's own ``StreamingQueryProgress.json()`` string.  PySpark's
+    stock wrapper first rebuilds the whole progress object in Python
+    (``QueryProgressEvent.fromJObject``: dozens of py4j reflection calls
+    per trigger, each a class lookup on the JVM's listener thread) and
+    only then runs the callback, which would read that same string back.
+    So ``_jlistener`` registers :class:`_ProgressJsonBridge` instead, which
+    fetches ``jevent.progress().json()`` in one call; the Python callbacks
+    below stay for direct use."""
 
     def __init__(self, query_name: str):
         self.query_name = query_name
         self.progresses: list[dict] = []
         self._terminated = threading.Event()
 
+    @property
+    def _jlistener(self):
+        """The JVM listener ``spark.streams.addListener`` registers (the
+        same wrapper class PySpark's own ``_jlistener`` builds, around the
+        one-call bridge); one object per listener, so ``removeListener``
+        finds it."""
+        from pyspark import SparkContext
+
+        if not hasattr(self, "_jlistenerobj"):
+            self._jlistenerobj = SparkContext._jvm.PythonStreamingQueryListenerWrapper(
+                _ProgressJsonBridge(self)
+            )
+        return self._jlistenerobj
+
+    def _add_progress_json(self, progress_json: str) -> None:
+        p = json.loads(progress_json)
+        if p.get("name") == self.query_name:
+            self.progresses.append(p)
+
     # -- listener callbacks (bus thread) --------------------------------
     def onQueryStarted(self, event) -> None:  # noqa: D102
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: D102
-        p = json.loads(event.progress.json)
-        if p.get("name") == self.query_name:
-            self.progresses.append(p)
+        self._add_progress_json(event.progress.json)
 
     def onQueryIdle(self, event) -> None:  # noqa: D102
         pass

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .summarizer import stream_start_conf
+
 __all__ = ["upsert_batch_writer", "materialize_stream_to_serving"]
 
 
@@ -91,12 +93,13 @@ def materialize_stream_to_serving(
     Update mode emits only changed (window, key) rows per trigger
     (ref summarizer.py:107) — exactly what a keyed merge wants as input.
     """
-    query = (
-        result.writeStream.outputMode("update")
-        .foreachBatch(upsert_batch_writer(table_dir, keys))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with stream_start_conf(result.sparkSession, checkpoint_dir):
+        query = (
+            result.writeStream.outputMode("update")
+            .foreachBatch(upsert_batch_writer(table_dir, keys))
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
     return query

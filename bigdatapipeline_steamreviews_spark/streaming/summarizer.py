@@ -17,10 +17,31 @@ closed and final.
 
 Checkpointing (T6): every start() takes a checkpoint dir — the
 fault-tolerance unit (offsets WAL + state store), exactly as the reference
-pins ``/tmp/spark_checkpoint_sentiment`` (summarizer.py:110).
+pins ``/tmp/spark_checkpoint_sentiment`` (summarizer.py:110).  Every start
+site runs inside :func:`stream_start_conf`, which picks the checkpoint
+file manager from the path:
+
+* Spark's default manager writes each checkpoint file through Hadoop's
+  ``FileContext``: create a temp file, set its permissions, rename it over
+  the target.  Without libhadoop's native IO (the PyPI Spark build ships
+  none) the local filesystem does each permission set and each link
+  lookup during the rename by forking ``chmod`` / ``readlink`` — about 70
+  child processes per trigger across the offset log, commit log, source
+  log and state files.
+* What that manager buys is an atomic rename on stores whose FileSystem
+  rename is not atomic.  A POSIX rename is atomic, so on a local path
+  (no scheme, or ``file:``) the ``FileSystem``-based manager gives the
+  same guarantee without the forks.  Any other scheme keeps Spark's
+  default; so does a session that names a manager itself.  The on-disk
+  formats are identical, so a checkpoint restarts under either manager
+  (pinned in tests/test_checkpoint_recovery.py), and state-file checksums
+  still wrap whichever manager is chosen.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +55,7 @@ __all__ = [
     "streaming_daily_summary",
     "run_to_memory_table",
     "stage_events_for_replay",
+    "stream_start_conf",
 ]
 
 # File-stream schema for STAGED events: stage_events_for_replay always
@@ -143,10 +165,59 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
+
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_file_manager(checkpoint_dir: str) -> str | None:
+    """The checkpoint file manager class for ``checkpoint_dir``: the
+    FileSystem-based one for a local path (no scheme, or ``file:``), None
+    (Spark's default) for any other scheme — see the module docstring."""
+    scheme = urlparse(checkpoint_dir).scheme.lower()
+    return FS_CHECKPOINT_MANAGER if scheme in ("", "file") else None
+
+
+@contextmanager
+def stream_start_conf(
+    spark: SparkSession, checkpoint_dir: str, conf: dict[str, str] | None = None
+):
+    """Set ``conf`` plus the checkpoint file manager for ``checkpoint_dir``
+    on ``spark`` for the duration of the block; restore every key on exit,
+    also when ``start()`` raises.
+
+    These are session confs a query reads when it starts (and the state
+    confs are then frozen into its checkpoint).  The query clones its
+    session inside ``start()``, but a V1 source (the file stream) is built
+    afterwards on the stream thread from the ORIGINAL session, so a
+    blocking caller keeps the block open until ``awaitTermination()``
+    returns; a caller that hands back a running query can only scope
+    ``start()``.  A manager named in ``conf`` or already set on the
+    session wins over the path's choice."""
+    want = dict(conf or {})
+    manager = checkpoint_file_manager(checkpoint_dir)
+    if manager is not None and spark.conf.get(CHECKPOINT_MANAGER_CONF, None) is None:
+        want.setdefault(CHECKPOINT_MANAGER_CONF, manager)
+    prev = {k: spark.conf.get(k, None) for k in want}
+    for k, v in want.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _resolve_state_provider(
@@ -154,21 +225,23 @@ def _resolve_state_provider(
 ) -> "tuple[bool, bool]":
     """Resolve the state-store flags from ``SPARK_GRAFT_STREAM_STATE``
     (``hdfs`` | ``rocksdb`` | ``rocksdb_changelog``; default ``hdfs``)
-    where the caller left them None — see ``run_to_memory_table``."""
+    where the caller left them None — see ``run_to_memory_table``.
+    Raises ValueError for changelog checkpointing without RocksDB."""
     import os
 
-    if rocksdb_state is not None and changelog_checkpoint is not None:
-        return rocksdb_state, changelog_checkpoint
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE", "hdfs").lower()
-    if env not in ("hdfs", "rocksdb", "rocksdb_changelog"):
-        raise ValueError(
-            f"SPARK_GRAFT_STREAM_STATE={env!r}: expected hdfs | rocksdb"
-            " | rocksdb_changelog"
-        )
-    if rocksdb_state is None:
-        rocksdb_state = env.startswith("rocksdb")
-    if changelog_checkpoint is None:
-        changelog_checkpoint = rocksdb_state and env == "rocksdb_changelog"
+    if rocksdb_state is None or changelog_checkpoint is None:
+        env = os.environ.get("SPARK_GRAFT_STREAM_STATE", "hdfs").lower()
+        if env not in ("hdfs", "rocksdb", "rocksdb_changelog"):
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_STATE={env!r}: expected hdfs | rocksdb"
+                " | rocksdb_changelog"
+            )
+        if rocksdb_state is None:
+            rocksdb_state = env.startswith("rocksdb")
+        if changelog_checkpoint is None:
+            changelog_checkpoint = rocksdb_state and env == "rocksdb_changelog"
+    if changelog_checkpoint and not rocksdb_state:
+        raise ValueError("changelog checkpointing is a RocksDB feature")
     return rocksdb_state, changelog_checkpoint
 
 
@@ -195,8 +268,8 @@ def run_to_memory_table(
     count is frozen into the checkpoint at first start.  Size it to state
     volume (distinct group keys), not to the session's batch default — a
     small-cardinality aggregate at 32 partitions pays 32 state tasks per
-    trigger for nothing.  Applied around start() and restored after, since
-    it is read from session conf at query start.
+    trigger for nothing.  Set for the run by :func:`stream_start_conf`
+    and restored after, since it is read from session conf at query start.
 
     ``rocksdb_state=True`` swaps the state store for RocksDB — the 100 TB
     option when streaming state (no-watermark aggregates, big dedup key
@@ -205,7 +278,8 @@ def run_to_memory_table(
     into the checkpoint at first start, hence set-and-restored here the
     same way.
 
-    ``changelog_checkpoint=True`` (RocksDB only) switches the provider
+    ``changelog_checkpoint=True`` (RocksDB only; ValueError without
+    ``rocksdb_state``) switches the provider
     to CHANGELOG checkpointing: each commit uploads the delta of state
     changes instead of a full (or incremental-SST) snapshot, and
     recovery replays changelogs over the last snapshot — the knob that
@@ -233,18 +307,14 @@ def run_to_memory_table(
         rocksdb_state, changelog_checkpoint
     )
     spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    prev_changelog = spark.conf.get(CHANGELOG_CONF, None)
+    conf = {}
     if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if rocksdb_state:
-        spark.conf.set(provider_key, ROCKSDB_PROVIDER)
+        conf[PROVIDER_CONF] = ROCKSDB_PROVIDER
     if changelog_checkpoint:
-        assert rocksdb_state, "changelog checkpointing is a RocksDB feature"
-        spark.conf.set(CHANGELOG_CONF, "true")
-    try:
+        conf[CHANGELOG_CONF] = "true"
+    with stream_start_conf(spark, checkpoint_dir, conf):
         query = (
             result.writeStream.format("memory")
             .queryName(query_name)
@@ -254,17 +324,4 @@ def run_to_memory_table(
             .start()
         )
         query.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if rocksdb_state:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
-        if changelog_checkpoint:
-            if prev_changelog is None:
-                spark.conf.unset(CHANGELOG_CONF)
-            else:
-                spark.conf.set(CHANGELOG_CONF, prev_changelog)
     return spark.table(query_name)

@@ -41,13 +41,14 @@ from bigdatapipeline_steamreviews_spark.streaming.sessions import (  # noqa: E40
 )
 from bigdatapipeline_steamreviews_spark.streaming.summarizer import (  # noqa: E402
     CHANGELOG_CONF,
+    PROVIDER_CONF,
     ROCKSDB_PROVIDER,
     events_file_stream,
+    stream_start_conf,
     streaming_daily_summary,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
 
 def _steal_ticks():
@@ -76,35 +77,25 @@ def build(spark, which: str, files_per_trigger: int):
 def run_one(spark, which, variant, parts, files_per_trigger, tag):
     result, mode = build(spark, which, files_per_trigger)
     ckpt = tempfile.mkdtemp(prefix="spark_graft_prof_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_prov = spark.conf.get(PROVIDER_KEY, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    conf = {"spark.sql.shuffle.partitions": str(parts)}
     if variant.startswith("rocksdb"):
-        spark.conf.set(PROVIDER_KEY, ROCKSDB_PROVIDER)
-        spark.conf.set(
-            CHANGELOG_CONF, "true" if variant == "rocksdb_changelog" else "false"
-        )
+        conf[PROVIDER_CONF] = ROCKSDB_PROVIDER
+        conf[CHANGELOG_CONF] = "true" if variant == "rocksdb_changelog" else "false"
     b0, s0 = _steal_ticks()
     t0 = time.time()
-    q = (
-        result.writeStream.format("memory")
-        .queryName(tag)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with stream_start_conf(spark, ckpt, conf):
+        q = (
+            result.writeStream.format("memory")
+            .queryName(tag)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     wall = time.time() - t0
     b1, s1 = _steal_ticks()
     prog = [json.loads(p.json) for p in q.recentProgress]
-    spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if variant.startswith("rocksdb"):
-        if prev_prov is None:
-            spark.conf.unset(PROVIDER_KEY)
-        else:
-            spark.conf.set(PROVIDER_KEY, prev_prov)
-        spark.conf.unset(CHANGELOG_CONF)
     n_rows = spark.table(tag).count()
     spark.catalog.dropTempView(tag)
     batches = []
@@ -141,14 +132,10 @@ def run_registered(spark, qname: str, tag: str):
 
     def wrapper(result, query_name, checkpoint_dir, output_mode="complete",
                 shuffle_partitions=None, **kw):
-        from bigdatapipeline_steamreviews_spark.streaming import summarizer
-
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        conf = {}
         if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
+            conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        with stream_start_conf(spark, checkpoint_dir, conf):
             q = (
                 result.writeStream.format("memory")
                 .queryName(query_name)
@@ -158,11 +145,9 @@ def run_registered(spark, qname: str, tag: str):
                 .start()
             )
             q.awaitTermination()
-            captured.setdefault("progress", []).extend(
-                json.loads(p.json) for p in q.recentProgress
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        captured.setdefault("progress", []).extend(
+            json.loads(p.json) for p in q.recentProgress
+        )
         return spark.table(query_name)
 
     qs.run_to_memory_table = wrapper

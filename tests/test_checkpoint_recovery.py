@@ -11,6 +11,7 @@ exercised: they all drain availableNow in one uninterrupted run.
 from __future__ import annotations
 
 import tempfile
+import time
 
 from pyspark.sql import functions as F
 
@@ -22,19 +23,37 @@ import pytest
 
 from bigdatapipeline_steamreviews_spark.streaming.summarizer import (
     CHANGELOG_CONF,
+    CHECKPOINT_MANAGER_CONF,
+    FS_CHECKPOINT_MANAGER,
     ROCKSDB_PROVIDER,
     events_file_stream,
+    stream_start_conf,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
 
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
-
-@pytest.fixture(
-    params=["hdfs", "rocksdb", "rocksdb_changelog"],
-    ids=["hdfs", "rocksdb", "rocksdb-changelog"],
+_FC_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
 )
+
+# (state provider, checkpoint file manager of run 1, of run 2).  The
+# FileContext-based manager is Spark's default; the swapped runs pin that
+# a checkpoint written under one manager restarts under the other.
+_FC, _FS = _FC_CHECKPOINT_MANAGER, FS_CHECKPOINT_MANAGER
+_CASES = {
+    "hdfs": ("hdfs", _FC, _FC),
+    "rocksdb": ("rocksdb", _FC, _FC),
+    "rocksdb-changelog": ("rocksdb_changelog", _FC, _FC),
+}
+for _id, (_prov, _, _) in list(_CASES.items()):
+    _CASES[f"{_id}-fc-to-fs"] = (_prov, _FC, _FS)
+    _CASES[f"{_id}-fs-to-fc"] = (_prov, _FS, _FC)
+
+
+@pytest.fixture(params=list(_CASES), ids=list(_CASES))
 def state_provider(request, spark):
     """Run the recovery scenario under all three state-store configs:
     the heap-backed default, RocksDB with full-snapshot checkpoints,
@@ -42,12 +61,15 @@ def state_provider(request, spark):
     the incremental-checkpoint mode that keeps per-trigger commit cost
     proportional to state CHANGES; recovery then must replay changelog
     files over the last snapshot, which is exactly the path a plain
-    uninterrupted drain never exercises)."""
+    uninterrupted drain never exercises) — each with both runs under
+    Spark's default checkpoint file manager, and with the two runs under
+    different managers."""
+    provider, _, _ = _CASES[request.param]
     prev_provider = spark.conf.get(_PROVIDER_KEY, None)
     prev_changelog = spark.conf.get(CHANGELOG_CONF, None)
-    if request.param != "hdfs":
+    if provider != "hdfs":
         spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
-    if request.param == "rocksdb_changelog":
+    if provider == "rocksdb_changelog":
         spark.conf.set(CHANGELOG_CONF, "true")
     yield request.param
     for key, prev in ((_PROVIDER_KEY, prev_provider), (CHANGELOG_CONF, prev_changelog)):
@@ -57,9 +79,17 @@ def state_provider(request, spark):
             spark.conf.set(key, prev)
 
 
+def _offset_log_manager(query) -> str:
+    return (
+        query._jsq.streamingQuery().offsetLog().fileManager().getClass().getName()
+    )
+
+
 def test_restart_from_checkpoint_reaches_batch_answer(spark, state_provider):
+    _, manager1, manager2 = _CASES[state_provider]
+    tag = state_provider.replace("-", "_")
     stage = _stage_events_chunks(spark, SF_DIR)
-    ckpt = tempfile.mkdtemp(prefix=f"recovery_ckpt_{state_provider}_")
+    ckpt = tempfile.mkdtemp(prefix=f"recovery_ckpt_{tag}_")
 
     def aggregate(stream):
         return stream.groupBy("event_type").agg(
@@ -70,26 +100,26 @@ def test_restart_from_checkpoint_reaches_batch_answer(spark, state_provider):
     # Run 1: one file per trigger, killed after the FIRST micro-batch
     # commits (awaitTermination with a poll loop on recentProgress).
     stream = events_file_stream(spark, stage, max_files_per_trigger=1)
-    q1 = (
-        aggregate(stream)
-        .writeStream.format("memory")
-        .queryName(f"recovery_run1_{state_provider}")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import time
-
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        done = [p for p in q1.recentProgress if p.numInputRows > 0]
-        if done:
-            break
-        time.sleep(0.2)
-    q1.stop()
-    q1.awaitTermination(30)
-    partial = {r.event_type: r.n for r in spark.table(f"recovery_run1_{state_provider}").collect()}
+    with stream_start_conf(spark, ckpt, {CHECKPOINT_MANAGER_CONF: manager1}):
+        q1 = (
+            aggregate(stream)
+            .writeStream.format("memory")
+            .queryName(f"recovery_run1_{tag}")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            done = [p for p in q1.recentProgress if p.numInputRows > 0]
+            if done:
+                break
+            time.sleep(0.2)
+        q1.stop()
+        q1.awaitTermination(30)
+    assert _offset_log_manager(q1) == manager1
+    partial = {r.event_type: r.n for r in spark.table(f"recovery_run1_{tag}").collect()}
     batch = {
         r.event_type: r.n
         for r in aggregate(load_table(spark, SF_DIR, "events")).collect()
@@ -104,19 +134,21 @@ def test_restart_from_checkpoint_reaches_batch_answer(spark, state_provider):
     # Run 2: same checkpoint, fresh query — resumes from committed
     # offsets and drains the rest (availableNow).
     stream2 = events_file_stream(spark, stage, max_files_per_trigger=1)
-    q2 = (
-        aggregate(stream2)
-        .writeStream.format("memory")
-        .queryName(f"recovery_run2_{state_provider}")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
+    with stream_start_conf(spark, ckpt, {CHECKPOINT_MANAGER_CONF: manager2}):
+        q2 = (
+            aggregate(stream2)
+            .writeStream.format("memory")
+            .queryName(f"recovery_run2_{tag}")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q2.awaitTermination()
+    assert _offset_log_manager(q2) == manager2
     final = {
         (r.event_type): (r.n, r.total)
-        for r in spark.table(f"recovery_run2_{state_provider}").collect()
+        for r in spark.table(f"recovery_run2_{tag}").collect()
     }
     want = {
         (r.event_type): (r.n, r.total)

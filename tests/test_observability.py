@@ -9,6 +9,8 @@ separately DuckDB-oracled as the registered query obs_ingest_metrics.
 
 from __future__ import annotations
 
+import inspect
+import json
 import os
 import tempfile
 import time
@@ -23,6 +25,7 @@ from bigdatapipeline_steamreviews_spark.sources.tables import (
 from bigdatapipeline_steamreviews_spark.streaming.metrics import (
     INGEST_OBS_NAME,
     StreamMetricsListener,
+    _ProgressJsonBridge,
     ingest_metric_exprs,
     metric_identity_values,
     observation_result,
@@ -283,3 +286,82 @@ def test_listener_drop_count_equals_late_row_oracle(spark):
     # the watermark filter): drops are accounted, not silently absorbed.
     n_staged = spark.read.parquet(stage).count()
     assert listener.observed_totals()["n_rows"] == n_staged
+
+
+def test_listener_progresses_equal_recent_progress(spark, monkeypatch):
+    """The one-call bridge captures exactly what the query reports: each
+    progress dict equals ``json.loads`` of the query's own progress JSON,
+    and PySpark's per-field event conversion never runs."""
+    from pyspark.sql.streaming import listener as pyspark_listener
+
+    converted = []
+    real = pyspark_listener.QueryProgressEvent.fromJObject.__func__
+
+    def counting(cls, jevent):
+        converted.append(1)
+        return real(cls, jevent)
+
+    monkeypatch.setattr(
+        pyspark_listener.QueryProgressEvent, "fromJObject", classmethod(counting)
+    )
+    name = _fresh_name()
+    listener = StreamMetricsListener(name)
+    spark.streams.addListener(listener)
+    try:
+        stream = events_file_stream(spark, _stage_displaced(spark), max_files_per_trigger=1)
+        query = (
+            streaming_daily_summary(stream, observe_name=INGEST_OBS_NAME)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="obs_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        assert listener.wait_terminated(), "listener never saw termination"
+    finally:
+        spark.streams.removeListener(listener)
+    want = [json.loads(p.json) for p in query.recentProgress]
+    assert len(want) >= 4
+    assert listener.progresses == want
+    assert converted == []
+
+
+def test_listener_bridge_pyspark_internals_are_pinned(spark):
+    """The bridge relies on PySpark internals: ``addListener`` registers
+    ``listener._jlistener``, which PySpark builds as a JVM
+    ``PythonStreamingQueryListenerWrapper`` around a py4j object
+    implementing ``PythonStreamingQueryListener``.  If an upgrade moves
+    any of these, fail here instead of silently falling back to the slow
+    per-field conversion (or losing progress events)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+    from pyspark.sql.streaming import listener as pyspark_listener
+    from pyspark.sql.streaming.query import StreamingQueryManager
+
+    assert isinstance(inspect.getattr_static(StreamingQueryListener, "_jlistener"), property)
+    assert isinstance(inspect.getattr_static(StreamMetricsListener, "_jlistener"), property)
+    stock = inspect.getsource(StreamingQueryListener._jlistener.fget)
+    assert "PythonStreamingQueryListenerWrapper" in stock
+    assert "listener._jlistener" in inspect.getsource(StreamingQueryManager.addListener)
+    assert "listener._jlistener" in inspect.getsource(StreamingQueryManager.removeListener)
+    assert (
+        _ProgressJsonBridge.Java.implements
+        == pyspark_listener.JStreamingQueryListener.Java.implements
+        == ["org.apache.spark.sql.streaming.PythonStreamingQueryListener"]
+    )
+    iface = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.streaming.PythonStreamingQueryListener"
+    )
+    callbacks = {m.getName() for m in iface.getMethods()}
+    assert callbacks == {
+        "onQueryStarted", "onQueryProgress", "onQueryIdle", "onQueryTerminated"
+    }
+    listener = StreamMetricsListener(_fresh_name())
+    spark.streams.addListener(listener)
+    try:
+        assert listener._jlistener.getClass().getName() == (
+            "org.apache.spark.sql.streaming.PythonStreamingQueryListenerWrapper"
+        )
+    finally:
+        spark.streams.removeListener(listener)

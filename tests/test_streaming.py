@@ -694,3 +694,23 @@ def test_state_provider_env_resolution(monkeypatch):
 
     with _pytest.raises(ValueError):
         _resolve_state_provider(None, None)
+
+
+def test_changelog_checkpoint_without_rocksdb_raises(monkeypatch):
+    """Changelog checkpointing is a RocksDB feature: asking for it on the
+    HDFS-backed store is a ValueError (not an assert, which ``python -O``
+    strips), whether the flag is explicit or the provider came from the
+    env knob."""
+    import pytest as _pytest
+
+    from bigdatapipeline_steamreviews_spark.streaming.summarizer import (
+        _resolve_state_provider,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE", raising=False)
+    with _pytest.raises(ValueError, match="RocksDB"):
+        _resolve_state_provider(False, True)
+    with _pytest.raises(ValueError, match="RocksDB"):
+        _resolve_state_provider(None, True)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "rocksdb_changelog")
+    assert _resolve_state_provider(None, True) == (True, True)
