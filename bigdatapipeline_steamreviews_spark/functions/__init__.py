@@ -21,6 +21,8 @@ from .columns import (
     md5_hash64,
     word_shingles,
     cosine_similarity,
+    cosine_prepare,
+    cosine_prepared,
     dot_product,
     l2_norm,
 )
@@ -34,6 +36,8 @@ __all__ = [
     "md5_hash64",
     "word_shingles",
     "cosine_similarity",
+    "cosine_prepare",
+    "cosine_prepared",
     "dot_product",
     "l2_norm",
 ]

@@ -20,6 +20,8 @@ __all__ = [
     "dot_product",
     "l2_norm",
     "cosine_similarity",
+    "cosine_prepare",
+    "cosine_prepared",
 ]
 
 # Exact decimal accumulator for double inputs: wide enough for 1e18 row
@@ -148,5 +150,61 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     element order is fixed per row (no partitioning involvement), so the
     value is fully deterministic — and bitwise identical to any engine that
     folds lists sequentially (DuckDB's list_sum does; verified empirically).
+
+    This per-pair form re-derives both norms for every pair (eight
+    interpreted higher-order-function passes per pair).  Where one side's
+    rows meet many rows of the other, prepare each side once with
+    :func:`cosine_prepare` and score with :func:`cosine_prepared` — the
+    same doubles, bit for bit.
     """
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+# --- Prepared cosine: per-row work once, per-pair work once ---------------
+# Higher-order functions (aggregate / zip_with / transform) are not
+# compiled to code: each is an interpreted pass over the array.  A pair
+# scored with cosine_similarity pays eight such passes — two widening
+# transforms, zip_with + aggregate for the dot, transform + aggregate per
+# norm — although the widening and the norms depend on ONE row only.  The
+# prepare step widens and norms each row once (inside the projection the
+# caller already has, so the plan gains no operator); the score step is
+# then one zip_with + aggregate and one division per pair.
+#
+# Bitwise equal to cosine_similarity: the float->double array cast is
+# exact and equals transform(x -> double(x)); the folds start at the same
+# double zero and run in the same left-to-right order; the quotient is
+# dot / (norm_a * norm_b) as before.
+#
+# The folds are SQL strings over column NAMES: one F.expr is one JVM
+# round trip, where building the same fold from Python lambdas takes
+# dozens (every lambda variable, literal and operator is a py4j call).
+
+
+def _sql_name(name: str) -> str:
+    """Backtick-quote a (possibly ``alias.column``-qualified) column name."""
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def cosine_prepare(vec: str, vec_as: str, norm_as: str) -> list[Column]:
+    """Prepare step of the prepared cosine: ``vec`` widened to
+    ``array<double>`` (as ``vec_as``) and its L2 norm (as ``norm_as``),
+    computed once per row.  Splice into the side's existing projection:
+    ``df.select(id_col, *cosine_prepare("embedding", "qv", "qn"))``."""
+    v = f"cast({_sql_name(vec)} AS array<double>)"
+    return [
+        F.expr(f"{v} AS {_sql_name(vec_as)}"),
+        F.expr(f"sqrt(aggregate({v}, 0D, (acc, x) -> acc + x * x)) AS {_sql_name(norm_as)}"),
+    ]
+
+
+def cosine_prepared(a: str, a_norm: str, b: str, b_norm: str) -> Column:
+    """Score step of the prepared cosine over two prepared sides: one dot
+    fold over the double vectors ``a`` and ``b``, divided by the product
+    of their prepared norms.  Bitwise equal to ``cosine_similarity`` on
+    the unprepared vectors (NULL for a zero or NULL vector: 0/0 is NULL
+    with ANSI off)."""
+    return F.expr(
+        f"aggregate(zip_with({_sql_name(a)}, {_sql_name(b)}, (x, y) -> x * y),"
+        f" 0D, (acc, x) -> acc + x)"
+        f" / ({_sql_name(a_norm)} * {_sql_name(b_norm)})"
+    )

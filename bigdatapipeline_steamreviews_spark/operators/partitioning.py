@@ -66,11 +66,16 @@ def _file_split_estimate(df: DataFrame) -> int | None:
     splits of ``min(maxPartitionBytes, max(openCost, totalBytes/minPart))``
     bytes, packed largest-first with each file charged ``openCost``.
     Returns None (caller falls back to the RDD probe) unless the analyzed
-    plan is narrow transforms over exactly ONE local file relation — the
-    only shape whose partitioning the estimate can reproduce exactly.
+    plan is narrow transforms over exactly ONE local, unpartitioned
+    parquet relation — the only shape whose partitioning the estimate can
+    reproduce exactly.  A partitioned relation is declined because
+    ``inputFiles()`` lists every file before partition pruning (a
+    partition filter would be over-counted); any other format because
+    its splittability (compressed CSV/JSON are not) is not modelled.
     """
     try:
-        lines = df._jdf.queryExecution().analyzed().treeString().splitlines()
+        analyzed = df._jdf.queryExecution().analyzed()
+        lines = analyzed.treeString().splitlines()
         n_rel = 0
         for ln in lines:
             m = _NODE_NAME.match(ln)
@@ -79,8 +84,14 @@ def _file_split_estimate(df: DataFrame) -> int | None:
             name = m.group(1)
             if name not in _NARROW_NODES:
                 return None
-            n_rel += name == "Relation"
+            if name == "Relation":
+                n_rel += 1
+                # LogicalRelation prints its source's short name last.
+                if not ln.rstrip().endswith(" parquet"):
+                    return None
         if n_rel != 1:
+            return None
+        if analyzed.collectLeaves().head().relation().partitionSchema().nonEmpty():
             return None
         files = df.inputFiles()
         if not files:

@@ -15,8 +15,11 @@ Two physical strategies behind one logical operation:
   prunes to matching files (partition pruning visible in .explain).
 
 No row-at-a-time Python UDFs anywhere: `zip_with`/`transform`/`aggregate`
-keep the math in Tungsten.  At 64-256 dims codegen'd expressions are
-competitive and keep plans fusable; ABOVE ~1k dims the arithmetic
+keep the math in the JVM.  Those higher-order functions are interpreted,
+not compiled, so every pair site scores from sides prepared once per row
+(`cosine_prepare`: double vector + norm) and pays one dot fold per pair
+(`cosine_prepared`).  At 64-256 dims the expressions are competitive and
+keep plans fusable; ABOVE ~1k dims the arithmetic
 dominates and one Arrow-batched numpy/BLAS hop wins — that path is
 `cosine_topk_blas` (round 14), which uses BLAS for SELECTION only and
 re-scores the surviving <= |q|*(k+margin) pairs with the exact
@@ -29,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.columns import avg_exact, cosine_similarity
+from ..functions.columns import avg_exact, cosine_prepare, cosine_prepared
 
 __all__ = [
     "cosine_topk_blas",
@@ -120,17 +123,24 @@ def cosine_topk(
     and the expensive cosine runs only on surviving rows — filter-then-rank,
     never rank-then-filter, which would both waste distance computations
     and return short result lists.
+
+    Each side is PREPARED once per row inside its existing projection
+    (``cosine_prepare``: the double-widened vector and its norm), so a
+    pair pays one dot fold and one division instead of re-running the
+    widening and both norm folds — higher-order functions are interpreted,
+    not compiled, so every pass over the array counts.  The scores are
+    bitwise those of the per-pair ``cosine_similarity``.
     """
     q = embeddings.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn")
     )
     corpus = embeddings if corpus_pred is None else embeddings.filter(corpus_pred)
-    # The cosine fold below costs ~2*dim interpreted lambda evaluations
-    # per (corpus row x query); spread the corpus scan so that math is
-    # not serialized on a single-split file (no-op at scale, guide §2.5).
+    # The dot fold below costs ~dim interpreted lambda evaluations per
+    # (corpus row x query); spread the corpus scan so that math is not
+    # serialized on a single-split file (no-op at scale, guide §2.5).
     c = spread_scan(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+            F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn")
         )
     )
     pairs = (
@@ -139,7 +149,7 @@ def cosine_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
         )
     )
     return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
@@ -351,9 +361,10 @@ def cosine_topk_blas(
        batch cut by bit-equal scores (degenerate corpora produce exactly
        those);
     3. the surviving <= |q| x (k+margin) pairs are re-scored with the
-       EXACT sequential-fold expression (``cosine_similarity`` on the
-       carried vectors, float->double widening is exact) and the final
-       top-k ranks on that exact score.
+       EXACT sequential-fold expression (the prepared cosine on the
+       carried vectors — the query norms are staged with the block,
+       float->double widening is exact) and the final top-k ranks on
+       that exact score.
 
     Float64 GEMM and the sequential fold round differently at the ulp
     level, so BLAS scores are used only to pick candidates with a
@@ -373,9 +384,10 @@ def cosine_topk_blas(
     )
     # float->double cast is exact, so staging doubles keeps the rescore
     # join bitwise-identical to the old driver-side float() conversion.
+    # The block also carries each query's norm for the rescore.
     q = embeddings.filter(query_pred).select(
         F.col(id_col).cast("long").alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        *cosine_prepare(vec_col, "qv", "qn"),
     )
     if q.limit(1).count() == 0:
         empty = spark.createDataFrame([], out_schema)
@@ -447,7 +459,7 @@ def cosine_topk_blas(
     pruned = (
         cand.withColumn("brank", F.row_number().over(wb))
         .filter(F.col("brank") <= take)
-        .drop("brank", "blas")
+        .select("query_id", "neighbor_id", *cosine_prepare("cv", "cv", "cn"))
     )
     # rescore against the staged block read back through Spark — the
     # query side stays distributed end-to-end (broadcast is plan-side);
@@ -460,7 +472,7 @@ def cosine_topk_blas(
     rescored = pruned.join(F.broadcast(qframe), "query_id").select(
         "query_id",
         "neighbor_id",
-        cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+        cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
     )
     return _topk(rescored, k).select("query_id", "neighbor_id", "cosine", "rank")
 
@@ -542,10 +554,10 @@ def cosine_topk_rp(
         "bucket", rp_bucket(F.col(vec_col), planes)
     )
     q = with_bucket.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "bucket"
+        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn"), "bucket"
     )
     c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "bucket"
+        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn"), "bucket"
     )
     pairs = (
         c.join(F.broadcast(q), "bucket")
@@ -554,7 +566,7 @@ def cosine_topk_rp(
             "query_id",
             "neighbor_id",
             F.col("bucket"),
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
         )
     )
     return _topk(pairs, k).select("query_id", "neighbor_id", "bucket", "cosine", "rank")
@@ -573,10 +585,10 @@ def cosine_topk_bucketed(
     a hash join that scales with bucket size, not corpus size."""
     with_bucket = embeddings.withColumn("bucket", sign_bucket(F.col(vec_col), bits))
     q = with_bucket.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "bucket"
+        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn"), "bucket"
     )
     c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "bucket"
+        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn"), "bucket"
     )
     pairs = (
         c.join(F.broadcast(q), "bucket")
@@ -585,7 +597,7 @@ def cosine_topk_bucketed(
             "query_id",
             "neighbor_id",
             F.col("bucket"),
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
         )
     )
     return _topk(pairs, k).select("query_id", "neighbor_id", "bucket", "cosine", "rank")
@@ -614,11 +626,11 @@ def cosine_topk_multiprobe(
     )
     q = with_bucket.filter(query_pred).select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
+        *cosine_prepare(vec_col, "qv", "qn"),
         F.explode(probes).alias("bucket"),
     )
     c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "bucket"
+        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn"), "bucket"
     )
     pairs = (
         c.join(F.broadcast(q), "bucket")
@@ -626,7 +638,7 @@ def cosine_topk_multiprobe(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
         )
     )
     return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
@@ -648,7 +660,7 @@ def embedding_near_dup_pairs(
     """
     with_bucket = embeddings.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        *cosine_prepare(vec_col, "v", "n"),
         sign_bucket(F.col(vec_col), bits).alias("bucket"),
     )
     a, b = with_bucket.alias("a"), with_bucket.alias("b")
@@ -661,7 +673,7 @@ def embedding_near_dup_pairs(
         .select(
             F.col("a.id").alias("a_id"),
             F.col("b.id").alias("b_id"),
-            cosine_similarity(F.col("a.v"), F.col("b.v")).alias("cosine"),
+            cosine_prepared("a.v", "a.n", "b.v", "b.n").alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(min_cosine))
     )
@@ -857,7 +869,7 @@ def cosine_topk_ivf(
     assignments, centroids = index
     corpus = assignments.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
+        *cosine_prepare(vec_col, "cv", "cn"),
         "list_id",
     )
 
@@ -865,7 +877,7 @@ def cosine_topk_ivf(
     # set, rank centroid distances per query, keep the n_probe nearest.
     qdist = (
         embeddings.filter(query_pred)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        .select(F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn"))
         .crossJoin(F.broadcast(centroids))
         .withColumn(
             "dist",
@@ -884,7 +896,7 @@ def cosine_topk_ivf(
     q = (
         qdist.withColumn("__pr", F.row_number().over(wprobe))
         .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "qv", "list_id")
+        .select("query_id", "qv", "qn", "list_id")
     )
     pairs = (
         corpus.join(F.broadcast(q), "list_id")
@@ -892,7 +904,7 @@ def cosine_topk_ivf(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
         )
     )
     return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
@@ -1072,7 +1084,7 @@ def semantic_dedup_pairs(
         vec_col=vec_col,
         cluster_col="cluster",
         centroid_col="centroid",
-    ).select(F.col(id_col).alias("id"), F.col("__v").alias("v"), "cluster")
+    ).select(F.col(id_col).alias("id"), *cosine_prepare("__v", "v", "n"), "cluster")
     if cache_assignment:
         assigned = assigned.localCheckpoint()
     a, b = assigned.alias("a"), assigned.alias("b")
@@ -1086,7 +1098,7 @@ def semantic_dedup_pairs(
             F.col("a.cluster").alias("cluster"),
             F.col("a.id").alias("a_id"),
             F.col("b.id").alias("b_id"),
-            cosine_similarity(F.col("a.v"), F.col("b.v")).alias("cosine"),
+            cosine_prepared("a.v", "a.n", "b.v", "b.n").alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(min_cosine))
     )
@@ -1174,16 +1186,20 @@ def mmr_diversify(
     pool = pool.localCheckpoint()
 
     vecs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v")
+        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "v", "n")
     )
     pvec = vecs.join(F.broadcast(pool), "neighbor_id")
     a = pvec.select(
         "query_id",
         F.col("neighbor_id").alias("a_id"),
         F.col("v").alias("av"),
+        F.col("n").alias("an"),
     )
     b = pvec.select(
-        "query_id", F.col("neighbor_id").alias("b_id"), F.col("v").alias("bv")
+        "query_id",
+        F.col("neighbor_id").alias("b_id"),
+        F.col("v").alias("bv"),
+        F.col("n").alias("bn"),
     )
     psim = (
         a.join(b, "query_id")
@@ -1192,7 +1208,7 @@ def mmr_diversify(
             "query_id",
             "a_id",
             "b_id",
-            cosine_similarity(F.col("av"), F.col("bv")).alias("s"),
+            cosine_prepared("av", "an", "bv", "bn").alias("s"),
         )
         .localCheckpoint()
     )
@@ -2062,7 +2078,7 @@ def ivf_pq_rerank_topk(
        hash join keyed on neighbor_id; at 100 TB it is the point-lookup
        against the id-sorted vector store every ANN service keeps next
        to its index) — and each survivor is re-scored with the exact
-       sequential-fold ``cosine_similarity``;
+       sequential-fold cosine (``cosine_prepared``);
     3. final top-``k`` ranks on the exact score (ties broken by
        neighbor_id, the engine-wide total order).
 
@@ -2091,15 +2107,15 @@ def ivf_pq_rerank_topk(
         index=index,
     ).select("query_id", "neighbor_id")
     cand = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn")
     ).join(F.broadcast(short), "neighbor_id")
     q = embeddings.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn")
     )
     pairs = cand.join(F.broadcast(q), "query_id").select(
         "query_id",
         "neighbor_id",
-        cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+        cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
     )
     return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
 

@@ -44,9 +44,10 @@ _CLEAN_EMB_SQL = (
 
 def _clean_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
+    # One SQL string: one JVM round trip instead of one per lambda
+    # variable and operator (the same expression).
     return emb.filter(
-        (F.size("embedding") == _EMB_DIM)
-        & ~F.exists("embedding", lambda x: x.isNull())
+        F.expr(f"size(embedding) = {_EMB_DIM} AND NOT exists(embedding, x -> x IS NULL)")
     )
 
 

@@ -725,10 +725,10 @@ def _staged_semantic_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's ``normed`` CTE, engine-side): the near-dup filter's cosine
     is then ONE dot-product fold per candidate pair instead of three —
     measured ~3x on the quadratic stage, the pipeline's cost center at
-    probe scale — and the quotient is bit-identical because the
-    precomputed ``sqrt(fold(x^2))`` is the same double ``l2_norm``
-    evaluates per pair."""
-    from .functions.columns import l2_norm
+    probe scale — and the quotient is bit-identical because ``v`` and
+    ``nrm`` are the prepared cosine's two columns (``cosine_prepare``,
+    scored by ``cosine_prepared`` in ``stream_curation_semantic``)."""
+    from .functions.columns import cosine_prepare
     from .operators.similarity import assign_to_centroids, label_centroids
     from .sources.staging import (
         source_fingerprint,
@@ -744,11 +744,9 @@ def _staged_semantic_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents = label_centroids(emb).select(
             F.col("label").alias("cluster"), "centroid"
         )
+        v, nrm = cosine_prepare("__v", "v", "nrm")
         return assign_to_centroids(emb, cents, cluster_col="cluster").select(
-            F.col("vec_id").alias("id"),
-            F.col("__v").alias("v"),
-            "cluster",
-            l2_norm(F.col("__v")).alias("nrm"),
+            F.col("vec_id").alias("id"), v, "cluster", nrm
         )
 
     fp = source_fingerprint(sf_dir, "embeddings")
@@ -857,7 +855,7 @@ def stream_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"stream_curation_sem_{_query_counter}"
     from pyspark.sql import functions as F
 
-    from .functions.columns import dot_product
+    from .functions.columns import cosine_prepared
 
     keys = _curation_lsh_survivors(spark, sf_dir)
     # ONE persist of the staged assignment table serves BOTH static sides
@@ -896,8 +894,8 @@ def stream_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the arrival iff some even-id vector in its cluster is within the
     # cosine threshold.  Broadcast hash anti-join (the candidate side is
     # embedding-table-sized), probing early-out per arrival; the cosine
-    # is ONE dot-product fold against the staged norms — bit-identical
-    # to cosine_similarity because the staged nrm IS l2_norm's double.
+    # is ONE dot-product fold against the staged norms (the prepared
+    # cosine) — bit-identical to the per-pair cosine_similarity.
     # At 100 TB the candidate side is bounded the SemDeDup way — k grows
     # with the corpus so per-cluster candidate sets stay broadcast-sized;
     # this label-count-k sandbox variant is the same degenerate-k caveat
@@ -911,9 +909,7 @@ def stream_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(corpus_side),
         (F.col("__scl") == F.col("__ecl"))
         & (
-            dot_product(F.col("__sv"), F.col("__ev"))
-            / (F.col("__snrm") * F.col("__enrm"))
-            >= F.lit(0.4)
+            cosine_prepared("__sv", "__snrm", "__ev", "__enrm") >= F.lit(0.4)
         ),
         "left_anti",
     )

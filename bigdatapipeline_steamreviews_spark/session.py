@@ -88,6 +88,17 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # No per-call call-site capture.  With it on, PySpark wraps every
+        # Column and functions call (pyspark.errors.utils._with_origin) in
+        # several py4j calls (active session, conf read, origin set/clear),
+        # a stack walk and a failing `import IPython` search — paid on
+        # every call while a query is built.  ANSI is off (above and
+        # ensure_parity_conf), so runtime errors carry no DataFrame context
+        # anyway; an AnalysisException keeps its error class, and the
+        # Python traceback still names the line.  Only getQueryContext()'s
+        # callSite shows a JVM frame instead of the Python file:line.
+        # SPARK_GRAFT_EXTRA_CONF can turn capture back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -369,9 +369,14 @@ _STAGE_SCHEMA_MEMO: dict = {}
 
 def read_stage_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Read a published stage directory with a memoized schema.  Keyed on
-    (abspath, dir mtime): publish_dir renames the build into place, which
-    stamps a fresh directory mtime, so a re-published stage (new corpus
-    fingerprint => new path anyway) can never serve a stale schema."""
+    (abspath, dir mtime).  The rename in publish_dir does NOT refresh the
+    mtime (rename(2) keeps the renamed directory's own); freshness comes
+    from elsewhere: every build writes into a newly created directory
+    (so its mtime is the build's), and a live path is never re-published
+    — publish is first-writer-wins on content-addressed paths, and a new
+    corpus fingerprint or new parameters mean a new path.  Reusing an old
+    build directory, or publishing over a live path, would break this
+    memo."""
     try:
         st = os.stat(path)
         key = (os.path.abspath(path), st.st_mtime_ns)

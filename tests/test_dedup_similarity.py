@@ -1160,6 +1160,78 @@ def test_cosine_topk_blas_bitwise_equals_expression_path(spark):
     assert blas == expr
 
 
+def test_cosine_topk_prepared_equals_per_pair_reference_bitwise(spark):
+    """cosine_topk scores each pair from sides prepared once per row
+    (cosine_prepare / cosine_prepared).  Every score must equal the
+    per-pair ``cosine_similarity`` bit for bit: the fixture corpus, a
+    zero vector as query and as candidate (0/0: NULL both ways), and vectors
+    whose elements span 1e-20 .. 1e20 (where a reassociated fold would
+    show); the fixture's malformed rows (NULL elements, wrong length)
+    score NULL both ways."""
+    import math
+    import struct
+
+    from bigdatapipeline_steamreviews_spark.functions import cosine_similarity
+    from bigdatapipeline_steamreviews_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    dim = 64
+    extra = [(10_000, [0.0] * dim)]
+    for i in range(4):
+        extra.append(
+            (
+                10_001 + i,
+                [
+                    (-1.0) ** (j + i) * 10.0 ** ((7 * j + 3 * i) % 41 - 20)
+                    for j in range(dim)
+                ],
+            )
+        )
+    base = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    emb = base.unionByName(
+        spark.createDataFrame(extra, "vec_id long, embedding array<float>")
+    )
+    query_pred = (F.col("vec_id") < 10) | (F.col("vec_id") >= 10_000)
+    n = emb.count()
+    got = {
+        (r.query_id, r.neighbor_id): r.cosine
+        for r in cosine_topk(emb, query_pred, k=n).collect()
+    }
+    q = emb.filter(query_pred).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
+    )
+    ref = {
+        (r.query_id, r.neighbor_id): r.cosine
+        for r in c.crossJoin(q)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
+        )
+        .collect()
+    }
+    assert set(got) == set(ref)
+
+    def bits(x):  # the fixture's malformed vectors score NULL both ways
+        if x is None:
+            return None
+        return "nan" if math.isnan(x) else struct.pack("<d", x)
+
+    assert {k: bits(v) for k, v in got.items()} == {
+        k: bits(v) for k, v in ref.items()
+    }
+    # The edge cases were exercised, not vacuous:
+    # 0/0 with ANSI off is NULL (not NaN) on both paths.
+    zero = [v for (qi, ni), v in got.items() if 10_000 in (qi, ni)]
+    assert len(zero) > n and all(v is None for v in zero)
+    mixed = [v for (qi, _), v in got.items() if qi > 10_000 and v is not None]
+    assert mixed and not any(math.isnan(v) for v in mixed)
+
+
 def test_cosine_topk_blas_highdim_and_edge_cases(spark):
     """>=1k dims (the regime the BLAS path exists for): equality against
     the expression path on a synthetic 1024-dim corpus; plus the empty-

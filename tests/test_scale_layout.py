@@ -334,6 +334,20 @@ def test_split_estimate_matches_rdd_probe(spark, tmp_path):
         spark.createDataFrame([(1, "a")], "id long, s string"),
         ev.select("event_id").union(ev.select("user_id")),
     ]
+    # A hive-partitioned directory: inputFiles() lists every partition's
+    # files before pruning, so a partition filter would be over-counted.
+    # A CSV scan: splittability is format- and codec-dependent.
+    parted = str(tmp_path / "parted")
+    docs.limit(60).withColumn("part", F.col("doc_id") % 3).write.partitionBy(
+        "part"
+    ).parquet(parted)
+    csv_dir = str(tmp_path / "csv")
+    docs.limit(30).select("doc_id", "lang").write.csv(csv_dir, header=True)
+    declined += [
+        spark.read.parquet(parted).filter(F.col("part") == 1),
+        spark.read.parquet(parted),
+        spark.read.csv(csv_dir, header=True),
+    ]
     for df in declined:
         assert _file_split_estimate(df) is None, (
             df._jdf.queryExecution().analyzed().treeString()
