@@ -18,7 +18,6 @@ from .columns import (
     count_if,
     normalize_bool_string,
     epoch_seconds_to_ts,
-    md5_hash64,
     word_shingles,
     cosine_similarity,
     cosine_prepare,
@@ -33,7 +32,6 @@ __all__ = [
     "count_if",
     "normalize_bool_string",
     "epoch_seconds_to_ts",
-    "md5_hash64",
     "word_shingles",
     "cosine_similarity",
     "cosine_prepare",

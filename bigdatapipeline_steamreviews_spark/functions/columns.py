@@ -15,7 +15,6 @@ __all__ = [
     "count_if",
     "normalize_bool_string",
     "epoch_seconds_to_ts",
-    "md5_hash64",
     "word_shingles",
     "dot_product",
     "l2_norm",
@@ -91,18 +90,6 @@ def epoch_seconds_to_ts(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.timestamp_seconds(c)
-
-
-def md5_hash64(col: Column, salt: str = "") -> Column:
-    """Portable 60-bit hash: first 15 hex digits of md5, parsed as a long.
-
-    md5 is bit-identical across engines (Spark, DuckDB, everything), which
-    makes MinHash/SimHash signatures oracle-checkable.  xxhash64 would be
-    ~3x faster but is Spark-private; swap via this one choke point if oracle
-    parity stops mattering.
-    """
-    salted = F.concat(F.lit(salt), col) if salt else col
-    return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("long")
 
 
 def word_shingles(col: Column | str, n: int = 3) -> Column:

@@ -345,7 +345,7 @@ def cosine_topk_blas(
        lakehouse scratch area — r15 ADVICE) and each executor
        Python worker loads it once per process from a single-slot cache,
        so driver memory is flat in |q| and 10^4-query blocks are fine
-       (``scripts/blas_query_scale_probe.py``);
+       (PERF.md, "BLAS query-side scalability");
     2. one ``mapInPandas`` pass computes the batch x query score matrix
        with a float64 GEMM (query-chunked so peak memory is
        O(batch x chunk), not O(batch x |q|)) and emits each query's

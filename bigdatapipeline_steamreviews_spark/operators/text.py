@@ -10,9 +10,9 @@ into the operators a 100 TB corpus pipeline needs.
 Scale notes:
 * everything here is embarrassingly parallel per-row projection work — no
   shuffle at all until a downstream aggregate;
-* hashes are md5 (engine-portable for the oracle); swap to xxhash64 via
-  functions.md5_hash64's choke point for ~3x cheaper hashing when parity
-  with external engines stops mattering.
+* hashes are md5 (engine-portable for the oracle); xxhash64 would be
+  ~3x cheaper but is Spark-private, so it fits only where parity with
+  external engines stops mattering.
 """
 
 from __future__ import annotations

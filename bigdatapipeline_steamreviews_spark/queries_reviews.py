@@ -273,11 +273,9 @@ def src_pyds_review_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch plan are the same logical query.",
 )
 def stream_pyds_review_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from .operators.aggregations import review_daily_summary as _summary
     from .sources.pyds import register_steamreviews_source
-    from .streaming.summarizer import run_to_memory_table
+    from .streaming.summarizer import replay_to_memory_table
 
     register_steamreviews_source(spark)
     stream = (
@@ -286,13 +284,8 @@ def stream_pyds_review_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(REVIEWS_FIXTURE)
     )
     result = _summary(stream)
-    ckpt = tempfile.mkdtemp(prefix="pyds_review_ckpt_")
-    return run_to_memory_table(
-        result,
-        "pyds_review_summary",
-        ckpt,
-        output_mode="complete",
-        shuffle_partitions=4,
+    return replay_to_memory_table(
+        result, "pyds_review_summary", "complete", shuffle_partitions=4
     )
 
 

@@ -1429,9 +1429,6 @@ def _stage_new_embedding_chunks(spark, sf_dir, chunks: int = 2) -> str:
     return stage
 
 
-_incr_counter = 0
-
-
 @register(
     "x3_ivf_pq_incremental",
     _pq_incremental_oracle(n_lists=8, n_sub=4, dim=64, codebook_k=4),
@@ -1453,13 +1450,8 @@ _incr_counter = 0
     "append shuffles nothing.",
 )
 def x3_ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from .streaming.summarizer import replay_to_memory_table
 
-    from .streaming.summarizer import run_to_memory_table
-
-    global _incr_counter
-    _incr_counter += 1
-    name = f"x3_incr_index_{_incr_counter}"
     n_sub, dim = 4, 64
     sub_dim = dim // n_sub
 
@@ -1480,9 +1472,8 @@ def x3_ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage)
     )
     increments = _incremental_index_rows(stream, cents, cb, n_sub, sub_dim)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    streamed = run_to_memory_table(
-        increments, name, checkpoint, "append", shuffle_partitions=8
+    streamed = replay_to_memory_table(
+        increments, "x3_incr_index", "append", shuffle_partitions=8
     )
     cols = ["vec_id", "origin", "list_id"] + [f"c{s}" for s in range(n_sub)]
     return (

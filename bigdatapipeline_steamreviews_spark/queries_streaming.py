@@ -25,6 +25,8 @@ from .sources.tables import load_table
 from .streaming.sessions import streaming_sessionize
 from .streaming.summarizer import (
     events_file_stream,
+    memory_table_name,
+    replay_to_memory_table,
     run_to_memory_table,
     stage_events_for_replay,
     stream_start_conf,
@@ -32,7 +34,6 @@ from .streaming.summarizer import (
 )
 
 from .sources.staging import STREAM_STAGE_ROOT as _STAGE_ROOT
-_query_counter = 0
 
 
 def _source_fingerprint(sf_dir: str) -> str:
@@ -72,13 +73,17 @@ def _stage_events_chunks(spark: SparkSession, sf_dir: str, chunks: int = 4) -> s
     return stage
 
 
-def _stage_events_chunks_duped(spark: SparkSession, sf_dir: str) -> str:
-    """Replay staging with at-least-once delivery simulated: the time-
-    ordered chunks, plus one chunk REDELIVERED at the end (a copy with a
-    later mtime, so the file source replays it as a new micro-batch).
-    Built in a temp dir and published atomically — two concurrent
-    builders copying into one directory would overwrite each other's
-    files and scramble the mtime ordering the replay depends on."""
+def _stage_events_derived(
+    spark: SparkSession, sf_dir: str, kind: str, add_later
+) -> str:
+    """A replay stage derived from :func:`_stage_events_chunks`: the base
+    chunks copied in mtime order 50 ms apart, then whatever
+    ``add_later(src, parts, build_dir)`` writes, which the file source
+    replays last.  Staged once per source fingerprint as
+    ``events_{kind}_{key}_us``, built in a temp dir and published
+    atomically — two concurrent builders copying into one directory would
+    overwrite each other's files and scramble the mtime ordering the
+    replay depends on."""
     import shutil
     import time
 
@@ -86,9 +91,9 @@ def _stage_events_chunks_duped(spark: SparkSession, sf_dir: str) -> str:
 
     src = _stage_events_chunks(spark, sf_dir)
     key = _source_fingerprint(sf_dir)
-    duped = os.path.join(_STAGE_ROOT, f"events_duped_{key}_us")
-    if not os.path.exists(os.path.join(duped, "_DONE")):
-        tmp = f"{duped}.build{os.getpid()}"
+    out = os.path.join(_STAGE_ROOT, f"events_{kind}_{key}_us")
+    if not os.path.exists(os.path.join(out, "_DONE")):
+        tmp = f"{out}.build{os.getpid()}"
         os.makedirs(tmp, exist_ok=True)
         parts = sorted(
             (f for f in os.listdir(src) if f.endswith(".parquet")),
@@ -97,30 +102,46 @@ def _stage_events_chunks_duped(spark: SparkSession, sf_dir: str) -> str:
         for f in parts:
             shutil.copy(os.path.join(src, f), os.path.join(tmp, f))
             time.sleep(0.05)
-        # Redeliver the second chunk (duplicate rows, arriving late).
-        shutil.copy(
-            os.path.join(src, parts[1]), os.path.join(tmp, "redelivered.parquet")
-        )
+        add_later(src, parts, tmp)
         open(os.path.join(tmp, "_DONE"), "w").close()
-        publish_dir(tmp, duped, marker="_DONE")
-    return duped
+        publish_dir(tmp, out, marker="_DONE")
+    return out
+
+
+def _stage_events_chunks_duped(spark: SparkSession, sf_dir: str) -> str:
+    """Replay staging with at-least-once delivery simulated: the time-
+    ordered chunks, plus one chunk REDELIVERED at the end (a copy with a
+    later mtime, so the file source replays it as a new micro-batch)."""
+    import shutil
+
+    def redeliver(src: str, parts: list, build: str) -> None:
+        # The second chunk again: duplicate rows, arriving late.
+        shutil.copy(
+            os.path.join(src, parts[1]), os.path.join(build, "redelivered.parquet")
+        )
+
+    return _stage_events_derived(spark, sf_dir, "duped", redeliver)
+
+
+def _events_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The time-ordered events replay (:func:`_stage_events_chunks`) as a
+    file stream at 2 files per trigger: still a multi-micro-batch replay
+    (cross-batch state is exercised), but half the per-trigger fixed cost
+    — each trigger pays a state-store commit + Python-worker round per
+    partition, so batching more input per trigger is the honest streaming
+    tuning (final state is trigger-sizing-independent; profiled 2x
+    faster)."""
+    return events_file_stream(
+        spark, _stage_events_chunks(spark, sf_dir), max_files_per_trigger=2
+    )
 
 
 def _run_stream(
     spark: SparkSession, sf_dir: str, watermark: str | None, output_mode: str
 ) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_summary_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    # 2 files/trigger: still a multi-micro-batch replay (cross-batch state
-    # is exercised), but half the per-trigger fixed cost — each trigger
-    # pays a state-store commit + Python-worker round per partition, so
-    # batching more input per trigger is the honest streaming tuning
-    # (final state is trigger-sizing-independent; profiled 2x faster).
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
-    result = streaming_daily_summary(stream, watermark=watermark)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+    result = streaming_daily_summary(
+        _events_replay(spark, sf_dir), watermark=watermark
+    )
     # State is 150 rows (days x event types), and the r16 profiling pass
     # measured the replay's wall as ~linear in triggers x state partitions
     # (~150 ms per state task per trigger: checkpoint delta write + store
@@ -130,8 +151,8 @@ def _run_stream(
     # run_to_memory_table docstring: size state partitions to state
     # volume, not input volume — at arrival-rate-sized triggers the same
     # rule picks the big number instead).
-    return run_to_memory_table(
-        result, name, checkpoint, output_mode, shuffle_partitions=2
+    return replay_to_memory_table(
+        result, "stream_summary", output_mode, shuffle_partitions=2
     )
 
 
@@ -181,16 +202,12 @@ def stream_daily_summary_watermarked(spark: SparkSession, sf_dir: str) -> DataFr
     "over the original input — the same oracle as the flagship.",
 )
 def stream_dedup_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_dedup_{_query_counter}"
     stage = _stage_events_chunks_duped(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     deduped = stream.dropDuplicates(["event_id"])
     result = streaming_daily_summary(deduped, watermark=None)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        result, "stream_dedup", "complete", shuffle_partitions=8
     )
 
 
@@ -208,18 +225,14 @@ def stream_dedup_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "input — the same oracle as the flagship.",
 )
 def stream_dedup_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_dedup_wm_{_query_counter}"
     stage = _stage_events_chunks_duped(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     deduped = stream.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     result = streaming_daily_summary(deduped, watermark=None)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        result, "stream_dedup_wm", "complete", shuffle_partitions=8
     )
 
 
@@ -274,20 +287,15 @@ WHERE s.session_id < l.m
     "Batch parity is also asserted in tests/test_streaming_sessions.py.",
 )
 def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sessions_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     result = streaming_sessionize(stream, gap_seconds=1800, watermark="30 minutes")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # Unlike the daily-summary aggregates (state = days x event types, 8
     # partitions ample), session state is per-USER — wide enough that the
     # Arrow state function's parallelism dominates the per-partition
     # trigger fixed cost.  Profiled at sf0.1: 16 -> 4.8 s vs 8 -> 6.4 s
     # vs 32 -> 5.1 s (best-of-3 each); state sizing tracks state width.
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    return replay_to_memory_table(
+        result, "stream_sessions", "append", shuffle_partitions=16
     )
 
 
@@ -342,11 +350,7 @@ WHERE end_us + 1800000000 <= wm.wm_ms * 1000
     "total_value accumulates in exact integer 1e-8 units on both sides.",
 )
 def stream_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sw_builtin_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
 
     from pyspark.sql import functions as F
 
@@ -370,11 +374,10 @@ def stream_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.col("total_q").cast("double") / F.lit(1e8)).alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # Same state-sizing logic as the custom sessionizer: per-user session
     # state is wide, 16 partitions (see stream_sessionization).
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    return replay_to_memory_table(
+        result, "stream_sw_builtin", "append", shuffle_partitions=16
     )
 
 
@@ -399,24 +402,19 @@ LIMIT 10
     "leaderboard a serving layer reads after every trigger.",
 )
 def stream_topn_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_topn_{_query_counter}"
     from pyspark.sql import functions as F
 
     from .functions.columns import sum_exact
 
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     ranked = (
         stream.groupBy("user_id")
         .agg(sum_exact("value").alias("total_value"))
         .orderBy(F.col("total_value").desc(), F.col("user_id"))
         .limit(10)
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        ranked, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        ranked, "stream_topn", "complete", shuffle_partitions=8
     )
 
 
@@ -478,9 +476,6 @@ GROUP BY 1
     "to the curation pipeline's ingest edge.",
 )
 def stream_document_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_doc_ingest_{_query_counter}"
     from pyspark.sql import functions as F
 
     stage = _stage_document_chunks(spark, sf_dir)
@@ -510,9 +505,8 @@ def stream_document_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        fresh, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        fresh, "stream_doc_ingest", "complete", shuffle_partitions=8
     )
 
 
@@ -690,9 +684,6 @@ GROUP BY f.content_hash
     "bounded broadcasts.",
 )
 def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_curation_{_query_counter}"
     from pyspark.sql import functions as F
 
     keys = _curation_lsh_survivors(spark, sf_dir)
@@ -702,9 +693,8 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_copies"),
         F.min("n_tokens").alias("n_tokens"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        survivors, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        survivors, "stream_curation", "complete", shuffle_partitions=8
     )
 
 
@@ -850,9 +840,6 @@ GROUP BY f.content_hash
     "queries_streaming.py::_staged_semantic_assignments.",
 )
 def stream_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_curation_sem_{_query_counter}"
     from pyspark.sql import functions as F
 
     from .functions.columns import cosine_prepared
@@ -918,9 +905,42 @@ def stream_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_copies"),
         F.min("n_tokens").alias("n_tokens"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        survivors, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        survivors, "stream_curation_sem", "complete", shuffle_partitions=8
+    )
+
+
+def _click_purchase_join(spark: SparkSession, stage: str, how: str) -> DataFrame:
+    """Purchases within the hour after a same-user click: a stream-stream
+    ``how`` join of two replays of ``stage`` (2 files per trigger), each
+    side watermarked 1 day so the watermark dominates the 1 h interval.
+    ``user_id`` is the click's user, or the purchase's where a full outer
+    join leaves the click side NULL (the join key is equal otherwise)."""
+
+    def side(event_type: str, user_as: str) -> DataFrame:
+        return (
+            events_file_stream(spark, stage, max_files_per_trigger=2)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(f"{event_type}_id"),
+                F.col("user_id").alias(user_as),
+                F.col("ts").alias(f"{event_type}_ts"),
+            )
+            .withWatermark(f"{event_type}_ts", "1 day")
+        )
+
+    return side("click", "c_user").join(
+        side("purchase", "p_user"),
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    ).select(
+        "click_id",
+        "purchase_id",
+        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
+        F.unix_timestamp("click_ts").alias("click_unix"),
+        F.unix_timestamp("purchase_ts").alias("purchase_unix"),
     )
 
 
@@ -945,49 +965,9 @@ JOIN events p
     "interval join, which is exactly what the oracle checks.",
 )
 def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_ss_join_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-
-    from pyspark.sql import functions as F
-
-    clicks = (
-        events_file_stream(spark, stage, max_files_per_trigger=2)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        events_file_stream(spark, stage, max_files_per_trigger=2)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_timestamp("click_ts").alias("click_unix"),
-        F.unix_timestamp("purchase_ts").alias("purchase_unix"),
-    )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        joined, name, checkpoint, "append", shuffle_partitions=8
+    joined = _click_purchase_join(spark, _stage_events_chunks(spark, sf_dir), "inner")
+    return replay_to_memory_table(
+        joined, "stream_ss_join", "append", shuffle_partitions=8
     )
 
 
@@ -1007,40 +987,28 @@ def _stage_events_with_flush_sentinels(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import time
 
-    from .sources.staging import publish_dir
     from .streaming.summarizer import _EVENTS_STAGED_SCHEMA
 
-    src = _stage_events_chunks(spark, sf_dir)
-    key = _source_fingerprint(sf_dir)
-    out = os.path.join(_STAGE_ROOT, f"events_flush_{key}_us")
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        tmp = f"{out}.build{os.getpid()}"
-        os.makedirs(tmp, exist_ok=True)
-        parts = sorted(
-            (f for f in os.listdir(src) if f.endswith(".parquet")),
-            key=lambda f: os.path.getmtime(os.path.join(src, f)),
-        )
-        for f in parts:
-            shutil.copy(os.path.join(src, f), os.path.join(tmp, f))
-            time.sleep(0.05)
+    def add_sentinels(src: str, parts: list, build: str) -> None:
         max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
         # Empty events partition -> max(ts) is NULL; any epoch works for
         # the sentinel then (there is no real data to flush past).
         flush_ts = int(max_ts or 0) + 7 * 24 * 3600 * 1_000_000
-        scratch = tempfile.mkdtemp(prefix="spark_graft_sentinel_")
-        spark.createDataFrame(
-            [
-                (-1, flush_ts, -999, "click", 0.0, "{}"),
-                (-2, flush_ts, -998, "purchase", 0.0, "{}"),
-            ],
-            _EVENTS_STAGED_SCHEMA,
-        ).coalesce(1).write.mode("overwrite").parquet(scratch)
-        part = next(f for f in os.listdir(scratch) if f.endswith(".parquet"))
-        time.sleep(0.05)  # strictly later mtime => sentinel replays LAST
-        shutil.copy(os.path.join(scratch, part), os.path.join(tmp, "zz_flush.parquet"))
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        publish_dir(tmp, out, marker="_DONE")
-    return out
+        with tempfile.TemporaryDirectory(prefix="spark_graft_sentinel_") as scratch:
+            spark.createDataFrame(
+                [
+                    (-1, flush_ts, -999, "click", 0.0, "{}"),
+                    (-2, flush_ts, -998, "purchase", 0.0, "{}"),
+                ],
+                _EVENTS_STAGED_SCHEMA,
+            ).coalesce(1).write.mode("overwrite").parquet(scratch)
+            part = next(f for f in os.listdir(scratch) if f.endswith(".parquet"))
+            time.sleep(0.05)  # strictly later mtime => sentinel replays LAST
+            shutil.copy(
+                os.path.join(scratch, part), os.path.join(build, "zz_flush.parquet")
+            )
+
+    return _stage_events_derived(spark, sf_dir, "flush", add_sentinels)
 
 
 @register(
@@ -1068,47 +1036,10 @@ WHERE c.event_type = 'click'
     "left join, which is exactly what the oracle checks.",
 )
 def stream_click_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_abandon_{_query_counter}"
     stage = _stage_events_with_flush_sentinels(spark, sf_dir)
-
-    clicks = (
-        events_file_stream(spark, stage, max_files_per_trigger=2)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        events_file_stream(spark, stage, max_files_per_trigger=2)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_timestamp("click_ts").alias("click_unix"),
-        F.unix_timestamp("purchase_ts").alias("purchase_unix"),
-    )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    table = run_to_memory_table(
-        joined, name, checkpoint, "append", shuffle_partitions=8
+    joined = _click_purchase_join(spark, stage, "left_outer")
+    table = replay_to_memory_table(
+        joined, "stream_abandon", "append", shuffle_partitions=8
     )
     # Sentinels carry impossible negative user ids; real users are >= 0.
     return table.filter(F.col("user_id") >= 0)
@@ -1131,16 +1062,11 @@ GROUP BY 1, 2
     "join+groupBy (same no-watermark equivalence as the flagship).",
 )
 def stream_enriched_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_enriched_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer")
     result = segment_daily_summary(stream, dim)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        result, "stream_enriched", "complete", shuffle_partitions=8
     )
 
 
@@ -1160,14 +1086,11 @@ def stream_enriched_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketches import hll_finalize, hll_register_table
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_hll_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     regs = hll_register_table(stream, "user_id", ["event_type"])
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    mem = run_to_memory_table(regs, name, checkpoint, "complete", shuffle_partitions=8)
+    mem = replay_to_memory_table(
+        regs, "stream_hll", "complete", shuffle_partitions=8
+    )
     return hll_finalize(mem, ["event_type"])
 
 
@@ -1196,15 +1119,10 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketches import qsk_quantiles
     from .streaming.qsketch import streaming_qsk_pools
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_qsk_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     pools_trace = streaming_qsk_pools(stream)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    mem = run_to_memory_table(
-        pools_trace, name, checkpoint, "update", shuffle_partitions=8
+    mem = replay_to_memory_table(
+        pools_trace, "stream_qsk", "update", shuffle_partitions=8
     )
     # The trace holds every pool version; n_seen is strictly monotone
     # per group, so max(n_seen) selects each group's final state.
@@ -1230,23 +1148,19 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_serving_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.serving_sink import materialize_stream_to_serving
 
-    global _query_counter
-    _query_counter += 1
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     result = streaming_daily_summary(stream, watermark=None)
     table_dir = tempfile.mkdtemp(prefix="spark_graft_serving_") + "/table"
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # Same state-store sizing rationale as run_to_memory_table: tiny state
     # cardinality (days x event types), 8 partitions.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_ckpt_"
+    ) as checkpoint, stream_start_conf(
+        spark, checkpoint, {"spark.sql.shuffle.partitions": "8"}
+    ):
         materialize_stream_to_serving(
             result, table_dir, keys=["event_type", "time"], checkpoint_dir=checkpoint
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(table_dir)
 
 
@@ -1285,11 +1199,7 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.transitions import streaming_transitions
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_transitions_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     # An untyped (NULL event_type) event is not a state: excluded from
     # the chain on both sides, so the oracle's WHERE from_state IS NOT
     # NULL keeps its intended meaning (drop each user's FIRST pair) and
@@ -1297,10 +1207,9 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # untyped'.
     stream = stream.filter(F.col("event_type").isNotNull())
     result = streaming_transitions(stream)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # Per-user state rows like sessionization -> same 16-partition sizing.
-    steps = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    steps = replay_to_memory_table(
+        result, "stream_transitions", "append", shuffle_partitions=16
     )
     counts = steps.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n_transitions")
@@ -1342,17 +1251,12 @@ def stream_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.ewma import streaming_ewma
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_ewma_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2).filter(
+    stream = _events_replay(spark, sf_dir).filter(
         F.col("value").isNotNull()
     )
     result = streaming_ewma(stream)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    trajectory = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    trajectory = replay_to_memory_table(
+        result, "stream_ewma", "append", shuffle_partitions=16
     )
     last = W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
@@ -1384,47 +1288,10 @@ FULL JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
     "drained output equals the batch FULL JOIN exactly.",
 )
 def stream_click_purchase_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_full_outer_{_query_counter}"
     stage = _stage_events_with_flush_sentinels(spark, sf_dir)
-
-    clicks = (
-        events_file_stream(spark, stage, max_files_per_trigger=2)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        events_file_stream(spark, stage, max_files_per_trigger=2)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "full_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        F.unix_timestamp("click_ts").alias("click_unix"),
-        F.unix_timestamp("purchase_ts").alias("purchase_unix"),
-    )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    table = run_to_memory_table(
-        joined, name, checkpoint, "append", shuffle_partitions=8
+    joined = _click_purchase_join(spark, stage, "full_outer")
+    table = replay_to_memory_table(
+        joined, "stream_full_outer", "append", shuffle_partitions=8
     )
     # Sentinels carry impossible negative user ids; real users are >= 0.
     return table.filter(F.col("user_id") >= 0)
@@ -1454,11 +1321,7 @@ GROUP BY 1
     "sf0.01 — a non-degenerate gate).",
 )
 def stream_orphan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_orphans_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     dim = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -1475,9 +1338,8 @@ def stream_orphan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orphans"),
         sum_exact("value").alias("orphan_value"),
     ).select(F.col("w.end").alias("time"), "n_orphans", "orphan_value")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        result, "stream_orphans", "complete", shuffle_partitions=8
     )
 
 
@@ -1523,11 +1385,7 @@ GROUP BY event_type, time
     "is a knob, not a necessity, at any scale.",
 )
 def stream_sliding_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sliding_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     result = (
         stream.groupBy(
             F.window("ts", "1 day", "12 hours").alias("w"), "event_type"
@@ -1543,9 +1401,8 @@ def stream_sliding_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__tv").cast("string").cast("double").alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        result, "stream_sliding", "complete", shuffle_partitions=8
     )
 
 
@@ -1592,11 +1449,7 @@ WHERE epoch_ms(time) <= (SELECT epoch_ms(max(ts)) FROM events) - 86400000
     "DECIMAL sums summed again at the second level stay exact.",
 )
 def stream_weekly_from_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_weekly_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     daily = (
         stream.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("day"), "event_type")
@@ -1618,9 +1471,8 @@ def stream_weekly_from_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__tv").cast("string").cast("double").alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        weekly, name, checkpoint, "append", shuffle_partitions=8
+    return replay_to_memory_table(
+        weekly, "stream_weekly", "append", shuffle_partitions=8
     )
 
 
@@ -1653,11 +1505,7 @@ ORDER BY event_type
     "Same oracle as the batch query.",
 )
 def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_checksum_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     row_hash = events_checksum_row_hash()
     result = (
         stream.select("event_type", row_hash.alias("__rh"))
@@ -1667,9 +1515,8 @@ def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("bit_xor(__rh)").alias("checksum"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    out = run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
+    out = replay_to_memory_table(
+        result, "stream_checksum", "complete", shuffle_partitions=8
     )
     return out.orderBy("event_type")
 
@@ -1703,17 +1550,18 @@ ORDER BY event_type
 def stream_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.columns import _ACC_DECIMAL, _dec_to_double
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_state_inspect_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast(_ACC_DECIMAL)).alias("total_value"),
     )
+    # Its own checkpoint, not a replay's: the state store read below is
+    # lazy and reads this directory whenever the result executes.
     ckpt = tempfile.mkdtemp(prefix="spark_graft_state_inspect_")
-    run_to_memory_table(agg, name, ckpt, "complete", shuffle_partitions=8)
+    run_to_memory_table(
+        agg, memory_table_name("stream_state_inspect"), ckpt, "complete",
+        shuffle_partitions=8,
+    )
     state = spark.read.format("statestore").load(ckpt)
     # The state row exposes the aggregation BUFFER fields by their internal
     # names: `count` for the count, and `sum` + `isEmpty` for the decimal
@@ -1787,11 +1635,7 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
     # (a max of us+gap >= us_k) also exceeds end_S — session ends are
     # strictly increasing, hence "us_i > max of ALL previous (us+gap)"
     # is exactly "starts after the current session's horizon".
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sw_dyngap_{_query_counter}"
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
 
     vq = F.floor(
         F.coalesce(F.col("value"), F.lit(0.0)) * F.lit(1e8) + F.lit(0.5)
@@ -1816,9 +1660,8 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
             (F.col("total_q").cast("double") / F.lit(1e8)).alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    return replay_to_memory_table(
+        result, "stream_sw_dyngap", "append", shuffle_partitions=16
     )
 
 
@@ -1837,9 +1680,6 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
 def stream_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_union_{_query_counter}"
     base = _stage_events_chunks(spark, sf_dir)
     key = _source_fingerprint(sf_dir)
     split_root = os.path.join(_STAGE_ROOT, f"events_split2_{key}_us")
@@ -1869,9 +1709,8 @@ def stream_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(split_root, "b"), max_files_per_trigger=1
     )
     result = streaming_daily_summary(sa.unionByName(sb), watermark=None)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
+    return replay_to_memory_table(
+        result, "stream_union", "complete", shuffle_partitions=8
     )
 
 
@@ -2038,9 +1877,6 @@ WHERE (s.session_end_unix + 1800) * 1000 + 1 < wm.wm_ms
 def stream_sessionization_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.sessions import streaming_sessionize_disordered
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sessions_dis_{_query_counter}"
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
     # 2 files/trigger (round-10, r9 ask #6): the emitted set is
     # watermark-determined — only the FINAL watermark (max ts - delay)
@@ -2056,9 +1892,8 @@ def stream_sessionization_disordered(spark: SparkSession, sf_dir: str) -> DataFr
     result = streaming_sessionize_disordered(
         stream, gap_seconds=1800, watermark=f"{wm_days} days"
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    return replay_to_memory_table(
+        result, "stream_sessions_dis", "append", shuffle_partitions=16
     )
 
 
@@ -2102,9 +1937,6 @@ def stream_transitions_disordered(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from .streaming.transitions import streaming_transitions_disordered
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_transitions_dis_{_query_counter}"
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
     # 2 files/trigger: watermark-determined output, hash-identical under
     # any batch decomposition; cross-trigger displacement preserved (see
@@ -2113,9 +1945,8 @@ def stream_transitions_disordered(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("event_type").isNotNull()
     )
     result = streaming_transitions_disordered(stream, watermark=f"{wm_days} days")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    steps = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    steps = replay_to_memory_table(
+        result, "stream_transitions_dis", "append", shuffle_partitions=16
     )
     counts = steps.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n_transitions")
@@ -2159,9 +1990,6 @@ def stream_user_ewma_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.ewma import streaming_ewma_disordered
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_ewma_dis_{_query_counter}"
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
     # 2 files/trigger: watermark-determined output, hash-identical under
     # any batch decomposition; cross-trigger displacement preserved (see
@@ -2170,9 +1998,8 @@ def stream_user_ewma_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull()
     )
     result = streaming_ewma_disordered(stream, watermark=f"{wm_days} days")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    trajectory = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
+    trajectory = replay_to_memory_table(
+        result, "stream_ewma_dis", "append", shuffle_partitions=16
     )
     last = W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
@@ -2294,15 +2121,15 @@ def stream_pyds_serving_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_serving_store_sink,
     )
 
-    global _query_counter
-    _query_counter += 1
     register_serving_store_sink(spark)
-    stage = _stage_events_chunks(spark, sf_dir)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=2)
+    stream = _events_replay(spark, sf_dir)
     result = streaming_daily_summary(stream, watermark=None)
     store_dir = tempfile.mkdtemp(prefix="spark_graft_pyds_store_")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    with stream_start_conf(spark, checkpoint, {"spark.sql.shuffle.partitions": "8"}):
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_ckpt_"
+    ) as checkpoint, stream_start_conf(
+        spark, checkpoint, {"spark.sql.shuffle.partitions": "8"}
+    ):
         q = (
             result.writeStream.format("servingstore")
             .outputMode("complete")

@@ -20,7 +20,6 @@ from ..schemas import REVIEW_SCHEMA
 
 __all__ = [
     "load_table",
-    "load_tables",
     "read_reviews_csv",
     "normalize_event_ts",
     "event_ts_micros",
@@ -131,10 +130,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_event_ts(df)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES))
 
 
 def read_reviews_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -36,7 +36,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 __all__ = [
     "streaming_sessionize",
     "streaming_sessionize_disordered",
-    "streaming_sessionize_tws",
     "SESSION_OUTPUT_SCHEMA",
 ]
 
@@ -75,16 +74,16 @@ def _advance_open_session(
     open_state: "tuple | None",
     gap_seconds: int,
 ) -> "tuple[tuple[list, list, list, list], tuple[int, int, int, int]]":
-    """Pure per-key session advance, shared by BOTH state APIs
-    (applyInPandasWithState below; transformWithStateInPandas twin).
+    """Pure per-key session advance: the core of
+    :func:`streaming_sessionize`'s state function.
 
     Given this batch's sorted event times + quantized values and the
     carried open-session accumulator (or None), returns
     ``((closed_starts, closed_lasts, closed_ns, closed_tots), new_open)``
     — every session this batch closes, and the accumulator for the one it
     leaves open.  All O(n) numpy (run split via gap > threshold, reduceat
-    sums), no per-row Python; factoring it keeps the two operator
-    frontends trivially thin and the core unit-testable without a stream.
+    sums), no per-row Python; factoring it keeps the operator's state
+    plumbing thin and the core unit-testable without a stream.
     """
     has_open = open_state is not None
     start, last, n, tot = open_state if has_open else (0, 0, 0, 0)
@@ -230,98 +229,6 @@ def streaming_sessionize(
         _STATE_SCHEMA,
         "append",
         GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def streaming_sessionize_tws(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """The same sessionizer on ``transformWithStateInPandas`` — Spark 4's
-    successor state API (typed ValueState, first-class timers) and the
-    one new deployments should target.
-
-    Semantics are identical to :func:`streaming_sessionize` by
-    construction: both frontends drive the same
-    :func:`_advance_open_session` core; only the state plumbing differs
-    (ValueState + an explicit event-time timer per open session instead
-    of GroupState + setTimeoutTimestamp).
-
-    GATED, not faked: the API's driver-worker handshake needs the
-    ``protobuf`` package, absent in this container — construction raises
-    there, and ``tests/test_streaming_sessions.py``'s equivalence test
-    skips until the environment gains it (the same posture as the Kafka
-    broker e2e).  The core it shares with the shipped operator stays
-    fully covered either way.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    def sessions_df(user_id, starts, lasts, ns, tots_q) -> pd.DataFrame:
-        starts_a = np.asarray(starts, dtype="int64")
-        lasts_a = np.asarray(lasts, dtype="int64")
-        return pd.DataFrame(
-            {
-                "user_id": np.full(len(starts_a), user_id, dtype="int64"),
-                "session_start_unix": starts_a,
-                "session_end_unix": lasts_a,
-                "duration_s": lasts_a - starts_a,
-                "n_events": np.asarray(ns, dtype="int64"),
-                "total_value": np.asarray(tots_q, dtype="int64") / float(_Q),
-            }
-        )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.open = handle.getValueState(
-                "open",
-                "start_unix BIGINT, last_unix BIGINT, "
-                "n_events BIGINT, total_q BIGINT",
-            )
-
-        def _rearm_timer(self, last_unix: int) -> None:
-            # One live timer per key: the session timeout at last+gap.
-            for t in self.handle.listTimers():
-                self.handle.deleteTimer(t)
-            self.handle.registerTimer((last_unix + gap_seconds) * 1000 + 1)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            batch = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-            if batch.empty:
-                return
-            unix, vals = _batch_unix_vals(batch)
-            open_state = (
-                tuple(self.open.get()) if self.open.exists() else None
-            )
-            closed, new_open = _advance_open_session(
-                unix, vals, open_state, gap_seconds
-            )
-            self.open.update(new_open)
-            self._rearm_timer(new_open[1])
-            if closed[0]:
-                yield sessions_df(user_id, *closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # Watermark passed last+gap: the open session is closed.
-            if self.open.exists():
-                start, last, n, tot = tuple(self.open.get())
-                self.open.clear()
-                yield sessions_df(key[0], [start], [last], [n], [tot])
-
-        def close(self) -> None:
-            pass
-
-    marked = events.withWatermark("ts", watermark)
-    return marked.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
     )
 
 

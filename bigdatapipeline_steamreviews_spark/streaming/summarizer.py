@@ -36,10 +36,18 @@ file manager from the path:
   formats are identical, so a checkpoint restarts under either manager
   (pinned in tests/test_checkpoint_recovery.py), and state-file checksums
   still wrap whichever manager is chosen.
+
+A checkpoint belongs to one run of one query.  The registry's replays
+run through :func:`replay_to_memory_table`, the one owner of that run: it
+mints the memory-table name and removes the checkpoint when the blocking
+run returns.  Callers that restart a query, or read its state store back,
+keep their own directory and call :func:`run_to_memory_table`.
 """
 
 from __future__ import annotations
 
+import itertools
+import tempfile
 from contextlib import contextmanager
 from urllib.parse import urlparse
 
@@ -53,6 +61,8 @@ from ..schemas import EVENT_SCHEMA
 __all__ = [
     "events_file_stream",
     "streaming_daily_summary",
+    "memory_table_name",
+    "replay_to_memory_table",
     "run_to_memory_table",
     "stage_events_for_replay",
     "stream_start_conf",
@@ -325,3 +335,36 @@ def run_to_memory_table(
         )
         query.awaitTermination()
     return spark.table(query_name)
+
+
+_memory_table_ids = itertools.count(1)
+
+
+def memory_table_name(prefix: str) -> str:
+    """``{prefix}_{n}``: a memory-sink query name no earlier run in this
+    process has used."""
+    return f"{prefix}_{next(_memory_table_ids)}"
+
+
+def replay_to_memory_table(
+    result: DataFrame,
+    name_prefix: str,
+    output_mode: str = "complete",
+    shuffle_partitions: int | None = None,
+) -> DataFrame:
+    """One replay run: :func:`run_to_memory_table` under a fresh
+    memory-table name and a checkpoint that lives only as long as the run.
+
+    The checkpoint (offset and commit logs, state store) exists to restart
+    this query.  Once the blocking availableNow run has returned nothing
+    restarts it, and the returned table reads the memory sink's rows,
+    which the driver holds, so the directory is removed on return, also
+    when the run raises."""
+    with tempfile.TemporaryDirectory(prefix="spark_graft_ckpt_") as checkpoint:
+        return run_to_memory_table(
+            result,
+            memory_table_name(name_prefix),
+            checkpoint,
+            output_mode,
+            shuffle_partitions=shuffle_partitions,
+        )

@@ -298,21 +298,13 @@ def test_builtin_session_emission_boundary(
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (gated on protobuf, like test_state_source)
+# The sessionizer's pure per-key core
 # ---------------------------------------------------------------------------
-
-import importlib.util  # noqa: E402
-
-_HAS_PROTOBUF = (
-    importlib.util.find_spec("google") is not None
-    and importlib.util.find_spec("google.protobuf") is not None
-)
 
 
 def test_advance_open_session_core_is_shared_and_pure():
-    """The numpy session-split core both state-API frontends drive —
-    covered here WITHOUT a stream so the gated twin's untested surface is
-    only the transformWithState plumbing itself."""
+    """The numpy session-split core streaming_sessionize's state
+    function drives, covered here WITHOUT a stream."""
     import numpy as np
 
     from bigdatapipeline_steamreviews_spark.streaming.sessions import (
@@ -337,35 +329,6 @@ def test_advance_open_session_core_is_shared_and_pure():
     )
     assert closed3 == ([1], [2], [1], [9])
     assert open3 == (100, 100, 1, 1)
-
-
-@pytest.mark.skipif(not _HAS_PROTOBUF, reason="transformWithState needs protobuf")
-def test_tws_sessionizer_matches_batch(spark, tmp_path):
-    """The transformWithStateInPandas twin must emit the same closed
-    sessions as the batch operator — runs the moment the environment
-    gains protobuf, skips cleanly until then."""
-    from bigdatapipeline_steamreviews_spark.streaming.sessions import (
-        streaming_sessionize_tws,
-    )
-
-    stage = str(tmp_path / "tws_stage")
-    stage_events_for_replay(spark, SF_DIR, stage, chunks=4)
-    stream = events_file_stream(spark, stage, max_files_per_trigger=1)
-    result = streaming_sessionize_tws(stream, gap_seconds=GAP, watermark="30 minutes")
-    got = run_to_memory_table(
-        result, "tws_sess_test", str(tmp_path / "tws_ckpt"), "append"
-    ).collect()
-    batch = {
-        (r.user_id, r.session_start_unix): r
-        for r in session_stats(
-            load_table(spark, SF_DIR, "events"), gap_seconds=GAP
-        ).collect()
-    }
-    assert len(got) > 0
-    for s in got:
-        b = batch.get((s.user_id, s.session_start_unix))
-        assert b is not None, f"tws session not in batch: {s}"
-        assert (s.session_end_unix, s.n_events) == (b.session_end_unix, b.n_events)
 
 
 # ---------------------------------------------------------------------------
