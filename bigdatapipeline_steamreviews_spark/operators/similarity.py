@@ -1,30 +1,43 @@
 """X3 — similarity search over embedding columns (SURVEY.md §2.8), plus
-embedding-cosine near-dup detection (the X2 family's vector member).
+the X2 family's vector members (embedding near-dup, semantic dedup).
 
-Two physical strategies behind one logical operation:
+Every top-k variant is a composition of the same four steps, and each
+step has one implementation in this module:
 
-* **Brute force** (`cosine_topk`): broadcast the (small) query set against
-  every candidate — O(|queries| x |corpus|) dot products, all JVM-side
-  array arithmetic inside codegen.  The right plan when queries are few:
-  the corpus is scanned once, never shuffled.
-* **Bucketed / IVF-style** (`sign_bucket` + `bucketed` variants): a
-  deterministic coarse quantizer (sign bits of leading dimensions — a
-  fixed-hyperplane LSH) partitions the corpus; search touches only the
-  query's bucket, trading recall for a 2^bits reduction in candidates.
-  At 100 TB the corpus would be written partitioned by bucket so the scan
-  prunes to matching files (partition pruning visible in .explain).
+* **partition** — the coarse cell a corpus vector lives in: none (brute
+  force), sign bits (:func:`sign_bucket`), random-projection bits
+  (:func:`rp_bucket`), or a centroid list (:func:`train_ivf`, or
+  :func:`seeded_centroids` + :func:`assign_to_centroids`, the
+  zero-shuffle broadcast argmin);
+* **probe** — the cells a query visits: its own bucket, its Hamming-1
+  neighbours (:func:`cosine_topk_multiprobe`), or its ``n_probe``
+  nearest centroids (:func:`_coarse_probe`);
+* **encode** — how candidates are held: raw floats, prepared once per
+  row for the cosine (``cosine_prepare``), or PQ codes
+  (:func:`_pq_encode`, over the vectors or their residuals against the
+  list centroid, :func:`_residual_index`);
+* **score and rank** — the prepared-cosine pair select
+  (:func:`_cosine_pairs`) or the ADC fold against a per-query lookup
+  table (:func:`_pq_lut`, :func:`_adc_topk`), ranked by the one
+  per-query window :func:`_topk` (score, then neighbor_id).
+
+Every squared distance is the one sequential fold :func:`_sq_dist` and
+every centroid mean the one quantized exact-decimal recipe
+:func:`_exact_means`, so all of it is bitwise reproducible against the
+DuckDB oracles under any partitioning.  At 100 TB the cell key is the
+partition column the corpus (or its code table) is written by, so a
+probe prunes to files.
 
 No row-at-a-time Python UDFs anywhere: `zip_with`/`transform`/`aggregate`
 keep the math in the JVM.  Those higher-order functions are interpreted,
 not compiled, so every pair site scores from sides prepared once per row
-(`cosine_prepare`: double vector + norm) and pays one dot fold per pair
-(`cosine_prepared`).  At 64-256 dims the expressions are competitive and
-keep plans fusable; ABOVE ~1k dims the arithmetic
+and pays one dot fold per pair.  At 64-256 dims the expressions are
+competitive and keep plans fusable; above ~1k dims the arithmetic
 dominates and one Arrow-batched numpy/BLAS hop wins — that path is
-`cosine_topk_blas` (round 14), which uses BLAS for SELECTION only and
-re-scores the surviving <= |q|*(k+margin) pairs with the exact
-expression fold, so its output is bitwise identical to `cosine_topk`
-whenever both agree on the top-k SET (measured crossover: PERF.md r14).
+:func:`cosine_topk_blas`, which uses BLAS for SELECTION only and
+re-scores the surviving <= |q|*2k pairs with the exact expression fold,
+so its output is bitwise identical to :func:`cosine_topk` whenever both
+agree on the top-k SET (measured crossover: PERF.md r14).
 """
 
 from __future__ import annotations
@@ -73,13 +86,62 @@ def sign_bucket(emb: Column, bits: int = 4) -> Column:
     return acc
 
 
-def _topk(pairs: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance as a sequential left fold — the same fold order
+    as DuckDB's ``list_sum``, so the double is bitwise engine-portable."""
+    diffsq = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
+    return F.aggregate(diffsq, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _topk(
+    pairs: DataFrame,
+    k: int,
+    score: str = "cosine",
+    ascending: bool = False,
+    extra: tuple = (),
+) -> DataFrame:
+    """Rank step: each query's top ``k`` pairs by ``score`` (descending
+    for a similarity, ascending for a distance), ties broken by
+    neighbor_id.  Returns (query_id, neighbor_id, *extra, score, rank)."""
+    order = F.col(score) if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", *extra, score, "rank")
+    )
+
+
+def _prepared(df: DataFrame, role: str, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """One side of a cosine pair, prepared once per row: the query side
+    (``role="q"``: query_id, qv, qn) or the corpus side (``role="c"``:
+    neighbor_id, cv, cn), plus ``extra`` columns."""
+    key = "query_id" if role == "q" else "neighbor_id"
+    return df.select(
+        F.col(id_col).alias(key), *cosine_prepare(vec_col, role + "v", role + "n"), *extra
+    )
+
+
+def _cosine_pairs(
+    c: DataFrame,
+    q: DataFrame,
+    on: str | None = None,
+    extra: tuple = (),
+    drop_self: bool = True,
+) -> DataFrame:
+    """Score step on raw vectors: the prepared corpus side joined to the
+    broadcast prepared query side (on the cell key ``on``, or as a cross
+    join), self pairs dropped, one prepared-cosine fold per pair.
+    ``drop_self=False`` is for pair sets that cannot hold a self pair
+    (a shortlist); a filter there would land above its window."""
+    pairs = c.crossJoin(F.broadcast(q)) if on is None else c.join(F.broadcast(q), on)
+    if drop_self:
+        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        *extra,
+        cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
     )
 
 
@@ -131,28 +193,13 @@ def cosine_topk(
     not compiled, so every pass over the array counts.  The scores are
     bitwise those of the per-pair ``cosine_similarity``.
     """
-    q = embeddings.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn")
-    )
+    q = _prepared(embeddings.filter(query_pred), "q", id_col, vec_col)
     corpus = embeddings if corpus_pred is None else embeddings.filter(corpus_pred)
     # The dot fold below costs ~dim interpreted lambda evaluations per
     # (corpus row x query); spread the corpus scan so that math is not
     # serialized on a single-split file (no-op at scale, guide §2.5).
-    c = spread_scan(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn")
-        )
-    )
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
-        )
-    )
-    return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
+    c = spread_scan(_prepared(corpus, "c", id_col, vec_col))
+    return _topk(_cosine_pairs(c, q), k)
 
 
 # --- BLAS query-block staging (r15: lifts the driver .collect()) ---------
@@ -327,7 +374,6 @@ def cosine_topk_blas(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    margin: int | None = None,
 ) -> DataFrame:
     """Brute-force top-k cosine neighbors via an Arrow-batched numpy/BLAS
     hop — the high-dimensional twin of :func:`cosine_topk` (round-14
@@ -349,9 +395,9 @@ def cosine_topk_blas(
     2. one ``mapInPandas`` pass computes the batch x query score matrix
        with a float64 GEMM (query-chunked so peak memory is
        O(batch x chunk), not O(batch x |q|)) and emits each query's
-       per-batch top ``k + margin`` candidates — per-partition heaps,
+       per-batch top ``2k`` candidates — per-partition heaps,
        the distributed analogue of TakeOrderedAndProject, so the hop's
-       output is O(partitions x |q| x (k+margin)) regardless of corpus
+       output is O(partitions x |q| x 2k) regardless of corpus
        size.  Per-batch selection is DETERMINISTIC under score ties
        (r14 ADVICE similarity.py:202): every row strictly above the
        argpartition boundary survives, and boundary-TIED rows are
@@ -360,24 +406,24 @@ def cosine_topk_blas(
        ranks by, so a true top-k neighbor can never be dropped at a
        batch cut by bit-equal scores (degenerate corpora produce exactly
        those);
-    3. the surviving <= |q| x (k+margin) pairs are re-scored with the
+    3. the surviving <= |q| x 2k pairs are re-scored with the
        EXACT sequential-fold expression (the prepared cosine on the
        carried vectors — the query norms are staged with the block,
        float->double widening is exact) and the final top-k ranks on
        that exact score.
 
     Float64 GEMM and the sequential fold round differently at the ulp
-    level, so BLAS scores are used only to pick candidates with a
-    ``margin`` of slack (default ``k``): the exact top-k set is missed
-    only if ulp noise reorders a true top-k pair past ``k + margin``
-    candidates — i.e. 2k+1 pairs within ~1e-15 of each other.  The
+    level, so BLAS scores are used only to pick candidates with ``k``
+    extra of slack: the exact top-k set is missed only if ulp noise
+    reorders a true top-k pair past ``2k`` candidates — i.e. 2k+1 pairs
+    within ~1e-15 of each other.  The
     bitwise-equality gate against :func:`cosine_topk` is pytest- and
     driver-enforced on the registered corpus.
     """
     import numpy as np
     import pandas as pd
 
-    take = k + (k if margin is None else margin)
+    take = 2 * k
     spark = embeddings.sparkSession
     out_schema = (
         "query_id long, neighbor_id long, blas double, cv array<double>"
@@ -418,7 +464,7 @@ def cosine_topk_blas(
             for lo in range(0, nq, qchunk):
                 hi = min(lo + qchunk, nq)
                 # cosine ~ (M @ Q.T) / (|M| * |Q|): ulp-inexact vs the
-                # fold, selection-only (see margin note in docstring)
+                # fold, selection-only (see the slack note in docstring)
                 S = (M @ Q[lo:hi].T) / np.outer(mn, qn[lo:hi])
                 S[nids[:, None] == qids[None, lo:hi]] = -np.inf  # self
                 t = min(take, S.shape[0])
@@ -469,12 +515,7 @@ def cosine_topk_blas(
     from ..sources.staging import read_stage_parquet
 
     qframe = read_stage_parquet(spark, qpath)
-    rescored = pruned.join(F.broadcast(qframe), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
-    )
-    return _topk(rescored, k).select("query_id", "neighbor_id", "cosine", "rank")
+    return _topk(_cosine_pairs(pruned, qframe, "query_id", drop_self=False), k)
 
 
 def rp_hyperplanes(bits: int, dim: int) -> list[list[float]]:
@@ -553,23 +594,24 @@ def cosine_topk_rp(
     with_bucket = spread_scan(clean).withColumn(
         "bucket", rp_bucket(F.col(vec_col), planes)
     )
-    q = with_bucket.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn"), "bucket"
-    )
-    c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn"), "bucket"
-    )
-    pairs = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("bucket"),
-            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
-        )
-    )
-    return _topk(pairs, k).select("query_id", "neighbor_id", "bucket", "cosine", "rank")
+    return _bucket_topk(with_bucket, query_pred, k, id_col, vec_col, extra=("bucket",))
+
+
+def _bucket_topk(
+    with_bucket: DataFrame,
+    query_pred: Column,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    q_bucket: "Column | str" = "bucket",
+    extra: tuple = (),
+) -> DataFrame:
+    """Probe + score + rank over a bucketed corpus: each query (in the
+    bucket(s) ``q_bucket``) is equi-joined to the corpus rows of its
+    bucket and ranked by exact cosine."""
+    q = _prepared(with_bucket.filter(query_pred), "q", id_col, vec_col, q_bucket)
+    c = _prepared(with_bucket, "c", id_col, vec_col, "bucket")
+    return _topk(_cosine_pairs(c, q, "bucket", extra), k, extra=extra)
 
 
 def cosine_topk_bucketed(
@@ -584,23 +626,7 @@ def cosine_topk_bucketed(
     sign bucket.  The cross join becomes an equality join on the bucket —
     a hash join that scales with bucket size, not corpus size."""
     with_bucket = embeddings.withColumn("bucket", sign_bucket(F.col(vec_col), bits))
-    q = with_bucket.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn"), "bucket"
-    )
-    c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn"), "bucket"
-    )
-    pairs = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("bucket"),
-            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
-        )
-    )
-    return _topk(pairs, k).select("query_id", "neighbor_id", "bucket", "cosine", "rank")
+    return _bucket_topk(with_bucket, query_pred, k, id_col, vec_col, extra=("bucket",))
 
 
 def cosine_topk_multiprobe(
@@ -624,24 +650,9 @@ def cosine_topk_multiprobe(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(bits)],
     )
-    q = with_bucket.filter(query_pred).select(
-        F.col(id_col).alias("query_id"),
-        *cosine_prepare(vec_col, "qv", "qn"),
-        F.explode(probes).alias("bucket"),
+    return _bucket_topk(
+        with_bucket, query_pred, k, id_col, vec_col, F.explode(probes).alias("bucket")
     )
-    c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn"), "bucket"
-    )
-    pairs = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
-        )
-    )
-    return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def embedding_near_dup_pairs(
@@ -663,14 +674,22 @@ def embedding_near_dup_pairs(
         *cosine_prepare(vec_col, "v", "n"),
         sign_bucket(F.col(vec_col), bits).alias("bucket"),
     )
-    a, b = with_bucket.alias("a"), with_bucket.alias("b")
+    return _cell_pairs(with_bucket, "bucket", min_cosine)
+
+
+def _cell_pairs(prepared: DataFrame, cell: str, min_cosine: float, *out) -> DataFrame:
+    """Near-dup step shared by the bucket and cluster dedups: every
+    same-``cell`` pair of prepared rows (id, v, n) once (a_id < b_id),
+    scored by the prepared cosine and kept at >= ``min_cosine``."""
+    a, b = prepared.alias("a"), prepared.alias("b")
     return (
         a.join(
             b,
-            (F.col("a.bucket") == F.col("b.bucket"))
+            (F.col(f"a.{cell}") == F.col(f"b.{cell}"))
             & (F.col("a.id") < F.col("b.id")),
         )
         .select(
+            *out,
             F.col("a.id").alias("a_id"),
             F.col("b.id").alias("b_id"),
             cosine_prepared("a.v", "a.n", "b.v", "b.n").alias("cosine"),
@@ -711,24 +730,42 @@ def label_centroids(
     # a prototype and its sort position in argmin tie-breaks is engine-
     # dependent (null-injection audit).
     embeddings = embeddings.filter(F.col(label_col).isNotNull())
-    pos = embeddings.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
-    )
-    val_q = F.floor(F.col("val").cast("double") * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-    per_component = pos.groupBy("label", "pos").agg(
-        avg_exact(val_q).alias("m")
+    assembled = _exact_means(
+        embeddings, (F.col(label_col).alias("label"),), vec_col, "centroid"
     )
     counts = embeddings.groupBy(F.col(label_col).alias("label")).agg(
         F.count(F.lit(1)).alias("n_vecs")
     )
-    assembled = per_component.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("m")))),
-            lambda s: s["m"],
-        ).alias("centroid")
-    )
     return assembled.join(counts, "label").select("label", "centroid", "n_vecs")
+
+
+def _exact_means(rows: DataFrame, keys: tuple, vec: str, out: str) -> DataFrame:
+    """Mean vector of ``vec`` per ``keys`` group (names or aliased
+    columns), as ``out``: components fan out by ``posexplode``, are
+    quantized to 1e-8 in double space and averaged in exact decimal (the
+    :func:`label_centroids` recipe), then reassemble in position order.
+    Shared by every centroid update."""
+    val_q = F.floor(F.col("val").cast("double") * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
+    exploded = rows.select(*keys, F.posexplode(F.col(vec)).alias("pos", "val"))
+    keys = exploded.columns[: len(keys)]
+    return (
+        exploded.groupBy(*keys, "pos")
+        .agg(avg_exact(val_q).alias("m"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
+            ).alias(out)
+        )
+    )
+
+
+def _sum_1e8(dist: Column) -> Column:
+    """Order-independent SUM of non-negative doubles: each is quantized to
+    integer 1e-8 units and summed in DECIMAL(38,0), so a cluster total is
+    exact under any partitioning."""
+    dq = F.floor(dist * F.lit(1e8) + F.lit(0.5)).cast("long")
+    return F.sum(dq.cast("decimal(38,0)")).cast("string").cast("double") / F.lit(1e8)
 
 
 def scalar_quantize(
@@ -771,11 +808,7 @@ def scalar_quantize(
         F.col("codes"),
         lambda c: F.col("vmin") + c.cast("double") * (F.col("vmax") - F.col("vmin")) / lv,
     )
-    sq_err = F.aggregate(
-        F.zip_with(F.col("__v"), dequant, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sq_err = _sq_dist(F.col("__v"), dequant)
     return tmp.select(id_col, "vmin", "vmax", "codes", sq_err.alias("sq_err"))
 
 
@@ -867,47 +900,27 @@ def cosine_topk_ivf(
     if index is None:
         index = train_ivf(embeddings, n_lists, seed, id_col, vec_col)
     assignments, centroids = index
-    corpus = assignments.select(
-        F.col(id_col).alias("neighbor_id"),
-        *cosine_prepare(vec_col, "cv", "cn"),
-        "list_id",
-    )
+    corpus = _prepared(assignments, "c", id_col, vec_col, "list_id")
+    q = _prepared(embeddings.filter(query_pred), "q", id_col, vec_col)
+    probe = _coarse_probe(q, centroids, n_probe, "qv", "qn")
+    return _topk(_cosine_pairs(corpus, probe, "list_id"), k)
 
-    # Query side: broadcast the centroid table against the (small) query
-    # set, rank centroid distances per query, keep the n_probe nearest.
-    qdist = (
-        embeddings.filter(query_pred)
-        .select(F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn"))
-        .crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "dist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv").cast("array<double>"),
-                    F.col("centroid"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
-    wprobe = Window.partitionBy("query_id").orderBy("dist", "list_id")
-    q = (
-        qdist.withColumn("__pr", F.row_number().over(wprobe))
+
+def _coarse_probe(q: DataFrame, centroids: DataFrame, n_probe: int, *carry) -> DataFrame:
+    """Probe step over centroid lists: each query's (query_id, qv)
+    squared distance to every broadcast (list_id, centroid) row, keeping
+    its ``n_probe`` nearest lists — a distance tie goes to the lower
+    list_id.  Returns (query_id, list_id, *carry); ``carry`` may read
+    ``qv`` and ``centroid``.  Centroids travel as a broadcast DataFrame,
+    never as plan literals, so the plan stays small at any n_lists."""
+    w = Window.partitionBy("query_id").orderBy("dist", "list_id")
+    return (
+        q.crossJoin(F.broadcast(centroids))
+        .withColumn("dist", _sq_dist(F.col("qv"), F.col("centroid")))
+        .withColumn("__pr", F.row_number().over(w))
         .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "qv", "qn", "list_id")
+        .select("query_id", "list_id", *carry)
     )
-    pairs = (
-        corpus.join(F.broadcast(q), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
-        )
-    )
-    return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def seeded_centroids(
@@ -925,8 +938,6 @@ def seeded_centroids(
     ``kmeans_lloyd`` / ``train_pq(lloyd_iters=...)`` machinery.  orderBy +
     limit compiles to TakeOrderedAndProject (map-side partial top-k, no
     corpus sort) and the relabel window runs on n_lists rows."""
-    from pyspark.sql import Window as _W
-
     return (
         embeddings.select(
             F.col(id_col).alias("__sid"),
@@ -938,7 +949,7 @@ def seeded_centroids(
         .limit(n_lists)
         .withColumn(
             "list_id",
-            (F.row_number().over(_W.orderBy("__sid")) - 1).cast("long"),
+            (F.row_number().over(Window.orderBy("__sid")) - 1).cast("long"),
         )
         .select("list_id", "centroid")
     )
@@ -995,49 +1006,26 @@ def assign_to_centroids(
         ).alias("s")
     ).agg(F.array_sort(F.collect_list("s")).alias("__cents"))
 
-    def sq_dist(vec: Column, cent: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(vec, cent, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    if carry_centroid is None:
-        scored = F.transform(
-            F.col("__cents"),
-            lambda s: F.struct(
-                sq_dist(F.col("__v"), s["cv"]).alias("d"), s["c"].alias("c")
-            ),
-        )
-        return (
-            embeddings.withColumn(
-                "__v", F.transform(F.col(vec_col), lambda x: x.cast("double"))
-            )
-            .crossJoin(F.broadcast(cent_arr))
-            .withColumn(cluster_col, F.array_min(scored)["c"])
-            .drop("__cents")
-        )
+    fields = {"c": cluster_col}
+    if carry_centroid is not None:
+        fields["cv"] = carry_centroid
     scored = F.transform(
         F.col("__cents"),
         lambda s: F.struct(
-            sq_dist(F.col("__v"), s["cv"]).alias("d"),
-            s["c"].alias("c"),
-            s["cv"].alias("cv"),
+            _sq_dist(F.col("__v"), s["cv"]).alias("d"), *[s[f].alias(f) for f in fields]
         ),
     )
-    base = embeddings.withColumn(
-        "__v", F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    )
     picked = (
-        base.crossJoin(F.broadcast(cent_arr))
+        embeddings.withColumn(
+            "__v", F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        )
+        .crossJoin(F.broadcast(cent_arr))
         .withColumn("__picked", F.array_min(scored))
         .drop("__cents")
     )
     keep = [c for c in picked.columns if c != "__picked"]
     return picked.select(
-        *keep,
-        F.col("__picked")["c"].alias(cluster_col),
-        F.col("__picked")["cv"].alias(carry_centroid),
+        *keep, *[F.col("__picked")[f].alias(name) for f, name in fields.items()]
     )
 
 
@@ -1047,7 +1035,6 @@ def semantic_dedup_pairs(
     label_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_assignment: bool = True,
 ) -> DataFrame:
     """X2e — semantic dedup, the SemDeDup shape (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus first, then search for
@@ -1067,8 +1054,8 @@ def semantic_dedup_pairs(
     cosine >= ``min_cosine``.  Downstream survivor selection composes with
     ``connected_components`` or an anti-join, same as the MinHash family.
 
-    ``cache_assignment`` materializes the assigned table once
-    (``localCheckpoint``) before the self-join — a self-join plans its
+    The assigned table is materialized once (``localCheckpoint``)
+    before the self-join — a self-join plans its
     subtree twice, and the subtree here contains the full centroid
     aggregation plus the per-row argmin fold.  At 100 TB the same move is
     "write the (id, cluster) assignment once, join from storage" —
@@ -1085,22 +1072,11 @@ def semantic_dedup_pairs(
         cluster_col="cluster",
         centroid_col="centroid",
     ).select(F.col(id_col).alias("id"), *cosine_prepare("__v", "v", "n"), "cluster")
-    if cache_assignment:
-        assigned = assigned.localCheckpoint()
-    a, b = assigned.alias("a"), assigned.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.cluster").alias("cluster"),
-            F.col("a.id").alias("a_id"),
-            F.col("b.id").alias("b_id"),
-            cosine_prepared("a.v", "a.n", "b.v", "b.n").alias("cosine"),
-        )
-        .filter(F.col("cosine") >= F.lit(min_cosine))
+    return _cell_pairs(
+        assigned.localCheckpoint(),
+        "cluster",
+        min_cosine,
+        F.col("a.cluster").alias("cluster"),
     )
 
 
@@ -1131,19 +1107,11 @@ def cluster_inertia(
     e = embeddings.select(
         F.col(label_col).alias("label"), F.col(vec_col).alias("__e")
     )
-    joined = e.join(F.broadcast(cents), "label")
-    diffsq = F.zip_with(
-        F.transform(F.col("__e"), lambda x: x.cast("double")),
-        F.col("centroid"),
-        lambda x, y: (x - y) * (x - y),
+    dist = _sq_dist(
+        F.transform(F.col("__e"), lambda x: x.cast("double")), F.col("centroid")
     )
-    dist = F.aggregate(diffsq, F.lit(0.0), lambda acc, x: acc + x)
-    dq = F.floor(dist * F.lit(1e8) + F.lit(0.5)).cast("long")
-    per = joined.select("label", dq.alias("__dq"))
-    inertia = (
-        F.sum(F.col("__dq").cast("decimal(38,0)")).cast("string").cast("double")
-        / F.lit(1e8)
-    )
+    per = e.join(F.broadcast(cents), "label").select("label", dist.alias("__d"))
+    inertia = _sum_1e8(F.col("__d"))
     return per.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         inertia.alias("inertia"),
@@ -1185,21 +1153,19 @@ def mmr_diversify(
     ).select("query_id", "neighbor_id", F.col("cosine").alias("rel"))
     pool = pool.localCheckpoint()
 
-    vecs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "v", "n")
-    )
+    vecs = _prepared(embeddings, "c", id_col, vec_col)
     pvec = vecs.join(F.broadcast(pool), "neighbor_id")
     a = pvec.select(
         "query_id",
         F.col("neighbor_id").alias("a_id"),
-        F.col("v").alias("av"),
-        F.col("n").alias("an"),
+        F.col("cv").alias("av"),
+        F.col("cn").alias("an"),
     )
     b = pvec.select(
         "query_id",
         F.col("neighbor_id").alias("b_id"),
-        F.col("v").alias("bv"),
-        F.col("n").alias("bn"),
+        F.col("cv").alias("bv"),
+        F.col("cn").alias("bn"),
     )
     psim = (
         a.join(b, "query_id")
@@ -1213,18 +1179,9 @@ def mmr_diversify(
         .localCheckpoint()
     )
 
-    def argmax(df: DataFrame, score_col: str) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col(score_col).desc(), F.col("neighbor_id")
-        )
-        return df.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") == 1
-        ).drop("__rn")
-
-    selected = (
-        argmax(pool, "rel")
-        .select("query_id", "neighbor_id", "rel")
-        .withColumn("step", F.lit(1))
+    # Each greedy step is an argmax: the rank step at k=1.
+    selected = _topk(pool, 1, "rel").select(
+        "query_id", "neighbor_id", "rel", F.lit(1).alias("step")
     )
     for step in range(2, select_k + 1):
         sel_ids = selected.select("query_id", F.col("neighbor_id").alias("b_id"))
@@ -1247,9 +1204,9 @@ def mmr_diversify(
             F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.col("maxsim"),
         )
         selected = selected.unionByName(
-            argmax(scored, "mmr")
-            .select("query_id", "neighbor_id", "rel")
-            .withColumn("step", F.lit(step))
+            _topk(scored, 1, "mmr", extra=("rel",)).select(
+                "query_id", "neighbor_id", "rel", F.lit(step).alias("step")
+            )
         )
     return selected.select("query_id", "step", "neighbor_id", "rel")
 
@@ -1281,8 +1238,6 @@ def kmeans_lloyd(
     runs pick it by elbow offline — convergence probing would add a
     driver action per round like connected_components').
     """
-    from ..functions import avg_exact
-
     e = embeddings.select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -1292,44 +1247,20 @@ def kmeans_lloyd(
     )
 
     def assign(cents: DataFrame) -> DataFrame:
-        pairs = e.crossJoin(F.broadcast(cents))
-        diffsq = F.zip_with(
-            F.col("v"), F.col("c"), lambda x, y: (x - y) * (x - y)
-        )
-        dist = F.aggregate(diffsq, F.lit(0.0), lambda acc, x: acc + x)
-        scored = pairs.select("vid", "cid", dist.alias("dist"))
-        best = (
-            scored.groupBy("vid")
+        dist = _sq_dist(F.col("v"), F.col("c"))
+        return (
+            e.crossJoin(F.broadcast(cents))
+            .select("vid", "cid", dist.alias("dist"))
+            .groupBy("vid")
             .agg(F.min(F.struct(F.col("dist"), F.col("cid"))).alias("m"))
-            .select(
-                "vid",
-                F.col("m.cid").alias("cid"),
-                F.col("m.dist").alias("dist"),
-            )
+            .select("vid", F.col("m.cid").alias("cid"), F.col("m.dist").alias("dist"))
         )
-        return best
 
     asg = assign(cents)
     for _ in range(iters - 1):
-        memb = asg.join(e, "vid").select(
-            "cid", F.posexplode(F.col("v")).alias("pos", "val")
-        )
-        val_q = F.floor(F.col("val") * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-        per = memb.groupBy("cid", "pos").agg(avg_exact(val_q).alias("m"))
-        cents = per.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("c")
-        )
-        asg = assign(cents)
-
-    dq = F.floor(F.col("dist") * F.lit(1e8) + F.lit(0.5)).cast("long")
-    inertia = (
-        F.sum(dq.cast("decimal(38,0)")).cast("string").cast("double") / F.lit(1e8)
-    )
+        asg = assign(_exact_means(asg.join(e, "vid"), ("cid",), "v", "c"))
     return asg.groupBy(F.col("cid").alias("centroid_id")).agg(
-        F.count(F.lit(1)).alias("n_assigned"), inertia.alias("inertia")
+        F.count(F.lit(1)).alias("n_assigned"), _sum_1e8(F.col("dist")).alias("inertia")
     )
 
 
@@ -1365,7 +1296,23 @@ def _pq_sliced_corpus(
     )
     if spread:
         e = spread_scan(e)
-    return e, n_sub, sub_dim
+    return e, sub_dim
+
+
+def _subspace_rows(n_sub: int, sub_dim: int, name: str) -> Column:
+    """Generator over ``v``: one (s, ``name``) row per subspace slice —
+    subspaces as DATA, so plan depth stays O(1) at any n_sub."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(s).cast("int").alias("s"),
+                    F.slice(F.col("v"), 1 + s * sub_dim, sub_dim).alias(name),
+                )
+                for s in range(n_sub)
+            ]
+        )
+    )
 
 
 def _pq_codebook(
@@ -1389,33 +1336,13 @@ def _pq_codebook(
     identically zero; seeding on them would collapse the fine codebook to
     duplicate zero centroids (every code ties to cid 0, ADC degenerates
     to ||query residual||^2).  Offset+limit is still a bounded top-k."""
-    from pyspark.sql import Window as _W
-
     seed_src = e.orderBy("vid")
     if skip > 0:
         seed_src = seed_src.offset(skip)
-    seeds = (
-        seed_src.limit(codebook_k)
-        .withColumn(
-            "cid", (F.row_number().over(_W.orderBy("vid")) - 1).cast("long")
-        )
+    seeds = seed_src.limit(codebook_k).withColumn(
+        "cid", (F.row_number().over(Window.orderBy("vid")) - 1).cast("long")
     )
-    return seeds.select(
-        "cid",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("int").alias("s"),
-                        F.slice(F.col("v"), 1 + s * sub_dim, sub_dim).alias(
-                            "c"
-                        ),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ),
-    ).select("s", "cid", "c")
+    return seeds.select("cid", _subspace_rows(n_sub, sub_dim, "c")).select("s", "cid", "c")
 
 
 def _validate_pq_index(
@@ -1452,7 +1379,7 @@ def _validate_pq_index(
     codebook with e.g. 3 and 5 centroids in two subspaces averages 4
     and would slip an average-based check while still degrading ADC
     rankings silently.  The density check (max cid == cnt-1, distinct
-    cids == cnt) exists because ``_pq_query_lut`` indexes LUT rows
+    cids == cnt) exists because ``_pq_lut`` indexes LUT rows
     POSITIONALLY via ``element_at`` — a codebook missing cid 0 would
     shift every lookup by one with no error.
 
@@ -1585,11 +1512,6 @@ def _validate_pq_index(
 _VALIDATED_PQ_PAIRS: set = set()
 
 
-def _pq_subdist(vec_slice: Column, cent: Column) -> Column:
-    diffsq = F.zip_with(vec_slice, cent, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(diffsq, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def _pq_codebook_nested(cb: DataFrame, n_sub: int) -> DataFrame:
     """Fold the long codebook into ONE row carrying
     ``cb: array[s] of array<struct<cid, c>>`` (cid-ascending within each
@@ -1610,169 +1532,109 @@ def _pq_codebook_nested(cb: DataFrame, n_sub: int) -> DataFrame:
     )
 
 
+def _pq_sub_dists(vec: str, s: int, sub_dim: int, score) -> Column:
+    """``score(d, entry)`` for every centroid entry of subspace ``s`` of
+    the joined-in nested codebook ``cb``, ``d`` the squared distance from
+    that subspace's slice of ``vec``."""
+    sl = F.slice(F.col(vec), 1 + s * sub_dim, sub_dim)
+    return F.transform(
+        F.element_at(F.col("cb"), s + 1), lambda ent: score(_sq_dist(sl, ent["c"]), ent)
+    )
+
+
 def _pq_encode(
-    e: DataFrame, cb: DataFrame, n_sub: int, sub_dim: int
+    rows: DataFrame, cb: DataFrame, n_sub: int, sub_dim: int, *carry, vec: str = "v"
 ) -> DataFrame:
-    """Encode: ``(vid, codes: array<long>)`` with ``codes[s]`` the argmin
-    centroid of subspace s.  The whole encode is ONE narrow expression per
-    corpus row against the one-row broadcast nested codebook — a single
-    corpus scan, ZERO shuffles (the former pivot shape shuffled the corpus
-    twice); at 100 TB this is the embarrassingly-parallel map stage it
-    should be, and the (vid, codes) table is the persisted artifact
-    (n_sub small ints per vector).
+    """Encode step: ``(*carry, codes: array<long>)`` with ``codes[s]`` the
+    argmin centroid of subspace s of ``vec``.  The whole encode is ONE
+    narrow expression per row against the one-row broadcast nested
+    codebook — a single scan, ZERO shuffles — and the code table is the
+    persisted artifact (n_sub small ints per vector).  Every index build
+    (plain, IVF-fused, residual, and the streaming incremental append)
+    encodes here, so they can never drift.
 
     Argmin per subspace is ``array_min`` over (dist, cid) structs —
     smallest distance, then smallest cid, exactly the oracle's
     ``row_number() ORDER BY dist, cid`` tie-break; distances are the
-    deterministic sequential folds of :func:`_pq_subdist`, so codes are
+    sequential folds of :func:`_sq_dist`, so codes are
     bitwise-reproducible under any partitioning."""
+    def argmin(d: Column, ent: Column) -> Column:
+        return F.struct(d.alias("d"), ent["cid"].alias("cid"))
 
-    nested = _pq_codebook_nested(cb, n_sub)
-    return (
-        e.crossJoin(F.broadcast(nested))
-        .select(
-            "vid",
-            F.array(
-                *[
-                    _pq_code_col(F.col("v"), s, sub_dim)
-                    for s in range(n_sub)
-                ]
-            ).alias("codes"),
-        )
+    codes = [
+        F.array_min(_pq_sub_dists(vec, s, sub_dim, argmin))["cid"] for s in range(n_sub)
+    ]
+    return rows.crossJoin(F.broadcast(_pq_codebook_nested(cb, n_sub))).select(
+        *carry, F.array(*codes).alias("codes")
     )
 
 
-def _pq_code_col(v: Column, s: int, sub_dim: int) -> Column:
-    """The PQ code of subspace ``s`` for vector column ``v`` — argmin
-    centroid via ``array_min`` over (dist, cid) structs against the
-    joined-in nested codebook column ``cb`` (see ``_pq_encode``, whose
-    encode expression this is; shared so the batch index build and the
-    streaming incremental append can never drift)."""
-    sl = F.slice(v, 1 + s * sub_dim, sub_dim)
-    scored = F.transform(
-        F.element_at(F.col("cb"), s + 1),
-        lambda ent: F.struct(
-            _pq_subdist(sl, ent["c"]).alias("d"), ent["cid"].alias("cid")
-        ),
-    )
-    return F.array_min(scored)["cid"]
-
-
-def _pq_query_lut(
-    e: DataFrame, cb: DataFrame, n_sub: int, sub_dim: int
+def _pq_lut(
+    q: DataFrame, cb: DataFrame, n_sub: int, sub_dim: int, vec: str, *carry
 ) -> DataFrame:
-    """Per-query lookup table ``(query_id, lut: array[s] of array<double>)``
-    — ``lut[s][cid]`` is the squared distance from the query's subspace-s
-    slice to centroid cid (cid-dense, so ADC is a positional
-    ``element_at``).  |queries| rows, each n_sub x codebook_k doubles —
-    broadcast-sized by construction."""
-
-    def lut_for(s: int) -> Column:
-        sl = F.slice(F.col("v"), 1 + s * sub_dim, sub_dim)
-        return F.transform(
-            F.element_at(F.col("cb"), s + 1),
-            lambda ent: _pq_subdist(sl, ent["c"]),
-        )
-
-    nested = _pq_codebook_nested(cb, n_sub)
-    return (
-        e.filter(F.col("is_q"))
-        .crossJoin(F.broadcast(nested))
-        .select(
-            F.col("vid").alias("query_id"),
-            F.array(*[lut_for(s) for s in range(n_sub)]).alias("lut"),
-        )
+    """Per-query lookup table ``(*carry, lut: array[s] of array<double>)``
+    — ``lut[s][cid]`` is the squared distance from the subspace-s slice
+    of ``vec`` (the query, or its residual against a probed list) to
+    centroid cid (cid-dense, so ADC is a positional ``element_at``).
+    Broadcast-sized by construction: one row per query (or probe)."""
+    lut = [_pq_sub_dists(vec, s, sub_dim, lambda d, ent: d) for s in range(n_sub)]
+    return q.crossJoin(F.broadcast(_pq_codebook_nested(cb, n_sub))).select(
+        *carry, F.array(*lut).alias("lut")
     )
 
 
-def _pq_adc_dist() -> Column:
-    """ADC distance from a ``codes`` array and a ``lut`` nested array:
-    sequential left fold of ``lut[s][codes[s]]`` in subspace order —
+def _adc_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Score + rank step on codes: each candidate's ADC distance — the
+    sequential left fold of ``lut[s][codes[s]]`` in subspace order,
     ``(0.0 + d0) + d1 + ...``, bitwise-identical to the oracle's
-    ``list_reduce(list(ld ORDER BY s))`` (adding 0.0 to a non-negative
-    double is exact)."""
+    ``list_reduce(list(ld ORDER BY s))`` — self pairs dropped, ascending
+    top-k.  ``cand`` carries (query_id, vid, codes, lut)."""
     per_s = F.zip_with(
         F.col("codes"),
         F.col("lut"),
         lambda code, row: F.element_at(row, code.cast("int") + 1),
     )
-    return F.aggregate(per_s, F.lit(0.0), lambda acc, x: acc + x)
+    adc = cand.select(
+        "query_id",
+        F.col("vid").alias("neighbor_id"),
+        F.aggregate(per_s, F.lit(0.0), lambda acc, x: acc + x).alias("adc_dist"),
+    ).filter(F.col("neighbor_id") != F.col("query_id"))
+    return _topk(adc, k, "adc_dist", ascending=True)
+
+
+# PQ codebooks train on a bounded deterministic sample (the smallest
+# vids), FAISS-style: never the full corpus.
+_PQ_TRAIN_SAMPLE = 4096
 
 
 def _pq_lloyd_codebook(
-    e: DataFrame,
-    n_sub: int,
-    sub_dim: int,
-    codebook_k: int,
-    iters: int,
-    sample_n: int | None,
+    e: DataFrame, n_sub: int, sub_dim: int, codebook_k: int, iters: int
 ) -> DataFrame:
     """Per-subspace Lloyd's k-means over the SEEDED codebook — the
     production PQ trainer (first-k seeding is the deterministic
-    initializer, k-means is what real PQ ships).  Runs on a bounded
-    deterministic SAMPLE (smallest ``sample_n`` vids — FAISS-style: PQ
-    codebooks train on ~1M sampled vectors, never the full corpus), with
-    the :func:`kmeans_lloyd` arithmetic discipline (1e-8-quantized
-    components, exact-decimal means) so the trained centroids are
-    partition-independent bitwise.
+    initializer, k-means is what real PQ ships).  Runs on the
+    ``_PQ_TRAIN_SAMPLE`` smallest vids, with the :func:`kmeans_lloyd`
+    arithmetic discipline (:func:`_exact_means`) so the trained
+    centroids are partition-independent bitwise.
 
     Empty clusters RETAIN their previous centroid (left-join + coalesce):
     the ADC lookup is POSITIONAL (``lut[s][code]`` with cid-dense
     arrays), so a vanished cid would misindex every later code in that
     subspace — density is a correctness invariant, not cosmetics."""
-    from ..functions import avg_exact
-
-    sample = e.orderBy("vid").limit(sample_n) if sample_n else e
-    long = sample.select(
-        "vid",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("int").alias("s"),
-                        F.slice(F.col("v"), 1 + s * sub_dim, sub_dim).alias(
-                            "sl"
-                        ),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ),
-    )
+    sample = e.orderBy("vid").limit(_PQ_TRAIN_SAMPLE)
+    long = sample.select("vid", _subspace_rows(n_sub, sub_dim, "sl"))
     cb = _pq_codebook(e, n_sub, sub_dim, codebook_k)
     for _ in range(iters):
         asg = (
             long.join(F.broadcast(cb), "s")
-            .select(
-                "vid",
-                "s",
-                "cid",
-                _pq_subdist(F.col("sl"), F.col("c")).alias("dist"),
-            )
+            .select("vid", "s", "cid", _sq_dist(F.col("sl"), F.col("c")).alias("dist"))
             .groupBy("vid", "s")
             .agg(F.min(F.struct("dist", "cid")).alias("m"))
             .select("vid", "s", F.col("m.cid").alias("cid"))
         )
-        memb = asg.join(long, ["vid", "s"]).select(
-            "s", "cid", F.posexplode(F.col("sl")).alias("pos", "val")
-        )
-        val_q = F.floor(F.col("val") * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-        means = (
-            memb.groupBy("s", "cid", "pos")
-            .agg(avg_exact(val_q).alias("m"))
-            .groupBy("s", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda x: x["m"],
-                ).alias("c_new")
-            )
-        )
-        cb = (
-            cb.join(means, ["s", "cid"], "left")
-            .select(
-                "s", "cid", F.coalesce(F.col("c_new"), F.col("c")).alias("c")
-            )
+        means = _exact_means(asg.join(long, ["vid", "s"]), ("s", "cid"), "sl", "c_new")
+        cb = cb.join(means, ["s", "cid"], "left").select(
+            "s", "cid", F.coalesce(F.col("c_new"), F.col("c")).alias("c")
         )
     return cb
 
@@ -1785,7 +1647,6 @@ def train_pq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     lloyd_iters: int = 0,
-    train_sample: int | None = 4096,
     spread: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the PQ pair a pipeline PERSISTS between queries: ``(codes,
@@ -1798,22 +1659,35 @@ def train_pq(
 
     ``lloyd_iters=0`` (default) keeps the deterministic first-k-seeded
     codebook the registered queries oracle against; ``lloyd_iters>0``
-    refines it with per-subspace k-means on a ``train_sample``-bounded
-    deterministic sample (:func:`_pq_lloyd_codebook`) — the production
+    refines it with per-subspace k-means on a bounded deterministic
+    sample (:func:`_pq_lloyd_codebook`) — the production
     configuration.  Encode/ADC are codebook-agnostic: the
     ADC-equals-reconstruction-distance identity and the IVF
     exhaustive-probe identity hold for ANY codebook and are
-    pytest-pinned for the trained one (tests/test_dedup_similarity.py)."""
-    e, n_sub, sub_dim = _pq_sliced_corpus(
+    pytest-pinned for the trained one (tests/test_dedup_similarity.py).
+    ``spread=False`` skips the ``spread_scan`` (see
+    :func:`pq_adc_topk`)."""
+    e, sub_dim = _pq_sliced_corpus(
         embeddings, F.lit(False), n_sub, dim, id_col, vec_col, spread=spread
     )
     if lloyd_iters > 0:
-        cb = _pq_lloyd_codebook(
-            e, n_sub, sub_dim, codebook_k, lloyd_iters, train_sample
-        )
+        cb = _pq_lloyd_codebook(e, n_sub, sub_dim, codebook_k, lloyd_iters)
     else:
         cb = _pq_codebook(e, n_sub, sub_dim, codebook_k)
-    return _pq_encode(e, cb, n_sub, sub_dim), cb
+    return _pq_encode(e, cb, n_sub, sub_dim, "vid"), cb
+
+
+def _pq_pair(
+    pq_index, embeddings, n_sub, sub_dim, codebook_k, dim, id_col, vec_col, spread=True
+) -> tuple[DataFrame, DataFrame]:
+    """The (codes, codebook) pair of a PQ probe: trained inline, or the
+    caller's prebuilt pair after the :func:`_validate_pq_index` guard."""
+    if pq_index is None:
+        return train_pq(
+            embeddings, n_sub, codebook_k, dim, id_col, vec_col, spread=spread
+        )
+    _validate_pq_index(pq_index[1], n_sub, sub_dim, codebook_k, codes=pq_index[0])
+    return pq_index
 
 
 def pq_adc_topk(
@@ -1826,7 +1700,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     pq_index: tuple[DataFrame, DataFrame] | None = None,
-    spread: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation (ADC)
     — the memory-compression half of the IVF+PQ recipe behind
@@ -1856,43 +1729,23 @@ def pq_adc_topk(
     sum is an ordered fold, so the whole pipeline (codes, ADC values,
     ranking) hash-gates bitwise at any n_sub.
 
-    ``spread=False`` (default; r17 verdict ask #3): this path OPTS OUT of
-    the r16 ``spread_scan`` its siblings keep — plain ADC's per-row math
+    This path OPTS OUT of the ``spread_scan`` its siblings keep (r17
+    verdict ask #3) — plain ADC's per-row math
     (n_sub x codebook_k tiny sub-distances) is too light to pay for the
     round-robin exchange, the same evidence class that reverted the
     ``cosine_topk_bucketed`` spread in r16; decided by an in-session
     alternating A/B (OPTIMIZATION_r17.md).  Placement-only either way —
     results are bitwise identical.
     """
-    e, n_sub, sub_dim = _pq_sliced_corpus(
-        embeddings, query_pred, n_sub, dim, id_col, vec_col, spread=spread
+    e, sub_dim = _pq_sliced_corpus(
+        embeddings, query_pred, n_sub, dim, id_col, vec_col, spread=False
     )
-    if pq_index is None:
-        pq_index = train_pq(
-            embeddings, n_sub, codebook_k, dim, id_col, vec_col, spread=spread
-        )
-    else:
-        _validate_pq_index(
-            pq_index[1], n_sub, sub_dim, codebook_k, codes=pq_index[0]
-        )
-    codes, cb = pq_index
-    lut = _pq_query_lut(e, cb, n_sub, sub_dim)
-
-    adc = (
-        codes.crossJoin(F.broadcast(lut))
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            _pq_adc_dist().alias("adc_dist"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    codes, cb = _pq_pair(
+        pq_index, embeddings, n_sub, sub_dim, codebook_k, dim, id_col, vec_col, spread=False
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
+    q = e.filter(F.col("is_q"))
+    lut = _pq_lut(q, cb, n_sub, sub_dim, "v", F.col("vid").alias("query_id"))
+    return _adc_topk(codes.crossJoin(F.broadcast(lut)), k)
 
 
 def ivf_pq_topk(
@@ -1946,104 +1799,41 @@ def ivf_pq_topk(
         index = train_ivf(embeddings, n_lists, seed, id_col, vec_col)
     assignments, centroids = index
 
-    e, n_sub, sub_dim = _pq_sliced_corpus(
-        embeddings, query_pred, n_sub, dim, id_col, vec_col
-    )
+    e, sub_dim = _pq_sliced_corpus(embeddings, query_pred, n_sub, dim, id_col, vec_col)
     if pq_index is None and vec_col in assignments.columns:
         # Fused encode (r16, guide §1.2 step 1 / §2.4): the assignment
-        # table (from train_ivf, or the staged full-assignments artifact)
-        # already carries the vectors, so the PQ codes are computed
-        # DIRECTLY on it — one map pass emitting (vid, list_id, codes) —
-        # instead of a second corpus scan through train_pq followed by a
-        # corpus-keyed codes ⋈ assignments hash join (2 Exchanges over
-        # corpus-cardinality rows, both gone).  Same _pq_code_col
-        # expressions over the same per-row floats, so codes are bitwise
-        # identical; the codebook seeding is train_pq's own recipe
-        # (_pq_codebook over the sliced corpus — only vid/v are read, so
-        # the query_pred difference is immaterial).
+        # table already carries the vectors, so the codes come out of one
+        # map pass over it — no second corpus scan through train_pq and
+        # no corpus-keyed codes ⋈ assignments join (2 Exchanges).  The
+        # codebook is train_pq's own seeding recipe, so codes are bitwise
+        # those of the join path.
         cb = _pq_codebook(e, n_sub, sub_dim, codebook_k)
-        asg_sliced = spread_scan(
+        asg = spread_scan(
             assignments.select(
                 F.col(id_col).alias("vid"),
-                F.transform(
-                    F.col(vec_col), lambda x: x.cast("double")
-                ).alias("v"),
+                F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
                 "list_id",
             )
         )
-        nested_cb = _pq_codebook_nested(cb, n_sub)
-        coded = asg_sliced.crossJoin(F.broadcast(nested_cb)).select(
-            "vid",
-            "list_id",
-            F.array(
-                *[_pq_code_col(F.col("v"), s, sub_dim) for s in range(n_sub)]
-            ).alias("codes"),
-        )
+        coded = _pq_encode(asg, cb, n_sub, sub_dim, "vid", "list_id")
     else:
-        # Prebuilt (vid, codes) pairs — e.g. the persisted PQ artifacts,
-        # or an assignments table staged without its vectors — keep the
-        # generic join path.
-        if pq_index is None:
-            pq_index = train_pq(
-                embeddings, n_sub, codebook_k, dim, id_col, vec_col
-            )
-        else:
-            _validate_pq_index(
-                pq_index[1], n_sub, sub_dim, codebook_k, codes=pq_index[0]
-            )
-        codes, cb = pq_index
+        codes, cb = _pq_pair(
+            pq_index, embeddings, n_sub, sub_dim, codebook_k, dim, id_col, vec_col
+        )
         coded = codes.join(
             assignments.select(F.col(id_col).alias("vid"), "list_id"), "vid"
         )
-    lut = _pq_query_lut(e, cb, n_sub, sub_dim)
-
-    # Coarse probe: rank centroid distances per query, keep the n_probe
-    # nearest lists.  Same shape as cosine_topk_ivf's query side — the
-    # centroids travel as a broadcast DataFrame, never plan literals.
-    qdist = (
-        e.filter(F.col("is_q"))
-        .select(F.col("vid").alias("query_id"), F.col("v").alias("qv"))
-        .crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "dist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"),
-                    F.col("centroid"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
+    q = e.filter(F.col("is_q"))
+    lut = _pq_lut(q, cb, n_sub, sub_dim, "v", F.col("vid").alias("query_id"))
+    probe = _coarse_probe(
+        q.select(F.col("vid").alias("query_id"), F.col("v").alias("qv")),
+        centroids,
+        n_probe,
     )
-    wprobe = Window.partitionBy("query_id").orderBy("dist", "list_id")
-    qprobe = (
-        qdist.withColumn("__pr", F.row_number().over(wprobe))
-        .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "list_id")
-    )
-
-    # Candidates: the (vid, list_id, codes) table pruned to the probed
-    # lists.  Each vector lives in exactly one list and each
-    # (query, list) probe pair is unique, so no (query, neighbor) pair can
-    # duplicate.  At scale ``coded`` is written partitioned by list_id so
-    # probes prune to files.
-    adc = (
-        coded.join(F.broadcast(qprobe), "list_id")
-        .join(F.broadcast(lut), "query_id")
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            _pq_adc_dist().alias("adc_dist"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
+    # Each vector lives in exactly one list and each (query, list) probe
+    # pair is unique, so no (query, neighbor) pair can duplicate.
+    return _adc_topk(
+        coded.join(F.broadcast(probe), "list_id").join(F.broadcast(lut), "query_id"), k
     )
 
 
@@ -2106,18 +1896,11 @@ def ivf_pq_rerank_topk(
         vec_col=vec_col,
         index=index,
     ).select("query_id", "neighbor_id")
-    cand = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), *cosine_prepare(vec_col, "cv", "cn")
-    ).join(F.broadcast(short), "neighbor_id")
-    q = embeddings.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), *cosine_prepare(vec_col, "qv", "qn")
+    cand = _prepared(embeddings, "c", id_col, vec_col).join(
+        F.broadcast(short), "neighbor_id"
     )
-    pairs = cand.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine_prepared("qv", "qn", "cv", "cn").alias("cosine"),
-    )
-    return _topk(pairs, k).select("query_id", "neighbor_id", "cosine", "rank")
+    q = _prepared(embeddings.filter(query_pred), "q", id_col, vec_col)
+    return _topk(_cosine_pairs(cand, q, "query_id", drop_self=False), k)
 
 
 def ivf_pq_residual_topk(
@@ -2162,12 +1945,11 @@ def ivf_pq_residual_topk(
       reconstruction distance ``||q_res - decode(codes)||^2`` summed
       subspace-wise (the identity the oracle recomputes; bitwise).
 
-    Corpus floats are read exactly ONCE at index-build time (r16: the
-    assign -> residual -> encode chain is one fused map pass emitting
-    (vid, list_id, codes); the fine-codebook seeds come from a
-    pre-limited (n_lists + codebook_k)-row frame, not a corpus pass) and
-    NEVER at probe time; nothing shuffles the corpus.  At 100 TB the (vid, list_id, codes) table is written
-    partitioned by list_id so probes prune to files — identical layout
+    The index comes from :func:`_residual_index`, the one builder the
+    staged form uses too: corpus floats are read exactly ONCE at build
+    time and NEVER at probe time; nothing shuffles the corpus.  At
+    100 TB the (vid, list_id, codes) table is written partitioned by
+    list_id so probes prune to files — identical layout
     story to :func:`ivf_pq_topk`, one extra subtraction per vector at
     build time.  Registered in the exhaustive-probe configuration
     (n_probe = n_lists): every candidate is scored exactly once against
@@ -2183,141 +1965,78 @@ def ivf_pq_residual_topk(
     codebook/codes pair goes through the same :func:`_validate_pq_index`
     truncation guard as every prebuilt PQ pair.
     """
-    e, n_sub, sub_dim = _pq_sliced_corpus(
-        embeddings, query_pred, n_sub, dim, id_col, vec_col
-    )
-    if index is not None:
+    e, sub_dim = _pq_sliced_corpus(embeddings, query_pred, n_sub, dim, id_col, vec_col)
+    if index is None:
+        centroids, cb, coded = _residual_index(
+            embeddings, e, n_lists, codebook_k, n_sub, sub_dim, id_col, vec_col
+        )
+    else:
         asg, centroids, codes, cb = index
         _validate_pq_index(cb, n_sub, sub_dim, codebook_k, codes=codes)
         coded = codes.join(asg.select("vid", "list_id"), "vid")
-    else:
-        centroids = seeded_centroids(embeddings, n_lists, id_col, vec_col)
-
-        # Fine-codebook seeds are the codebook_k smallest-vid residuals
-        # PAST the coarse seeds — a property of (n_lists + codebook_k)
-        # rows only, and the residual of a row depends on nothing but
-        # that row and the broadcast centroids.  Pre-limiting to those
-        # rows BEFORE the assignment math (r16, guide §1.2 step 1: don't
-        # compute things you throw away) removes what used to be a full
-        # corpus pass of argmin+residual arithmetic feeding a corpus-wide
-        # TakeOrdered that kept 20 rows; ``_pq_codebook``'s own
-        # offset/limit then runs on the 20-row frame.  Bitwise identical:
-        # TakeOrdered by vid commutes with the row-local residual map.
-        seed_rows = e.orderBy("vid").limit(n_lists + codebook_k)
-        seed_asg = assign_to_centroids(
-            seed_rows, centroids, id_col="vid", vec_col="v",
-            cluster_col="list_id", carry_centroid="__cent",
-        )
-        seed_res = seed_asg.select(
-            "vid",
-            F.zip_with("v", "__cent", lambda a, b: a - b).alias("v"),
-        )
-        cb = _pq_codebook(seed_res, n_sub, sub_dim, codebook_k, skip=n_lists)
-
-        # Assignment -> residual -> encode FUSED into one map pass (r16):
-        # the residual corpus already carries list_id, so emitting
-        # (vid, list_id, codes) directly both drops the former
-        # codes-join-assignments exchange pair (2 Exchange -> 0 on the
-        # build path) and evaluates the broadcast-argmin assignment
-        # expression once instead of three times (codebook path, encode
-        # path, join probe side).  Same expressions, same per-row math,
-        # so codes stay bitwise-reproducible.
-        #
-        # r17: the residual's centroid now rides OUT of the argmin itself
-        # (carry_centroid) instead of a join back to the centroid table on
-        # list_id — that inner join's inferred isnotnull(list_id) was
-        # being pushed below the projection as isnotnull(<whole argmin
-        # fold>), i.e. the full-corpus assignment math evaluated TWICE
-        # per row (plans/r17/x3_ivf_pq_residual_before.txt ops 15-16).
-        asg = assign_to_centroids(
-            e, centroids, id_col="vid", vec_col="v", cluster_col="list_id",
-            carry_centroid="__cent",
-        )
-        res = asg.select(
-            "vid",
-            "list_id",
-            F.zip_with("v", "__cent", lambda a, b: a - b).alias("v"),
-        )
-        nested_cb = _pq_codebook_nested(cb, n_sub)
-        coded = res.crossJoin(F.broadcast(nested_cb)).select(
-            "vid",
-            "list_id",
-            F.array(
-                *[_pq_code_col(F.col("v"), s, sub_dim) for s in range(n_sub)]
-            ).alias("codes"),
-        )
-
-    # Coarse probe: rank centroid distances per query, keep n_probe lists
-    # (ivf_pq_topk's shape), carrying the centroid for the residual LUT.
-    q = e.filter(F.col("is_q")).select(
-        F.col("vid").alias("query_id"), F.col("v").alias("qv")
-    )
-    qdist = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist",
-        F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("centroid"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    wprobe = Window.partitionBy("query_id").orderBy("dist", "list_id")
-    qprobe = (
-        qdist.withColumn("__pr", F.row_number().over(wprobe))
-        .filter(F.col("__pr") <= n_probe)
-        .select(
-            "query_id",
-            "list_id",
-            F.zip_with(
-                F.col("qv"), F.col("centroid"), lambda a, b: a - b
-            ).alias("qr"),
-        )
-    )
-
-    # Residual LUT per (query, probed list): lut[s][cid] = ||qr_s - c||^2
-    def lut_for(s: int) -> Column:
-        sl = F.slice(F.col("qr"), 1 + s * sub_dim, sub_dim)
-        return F.transform(
-            F.element_at(F.col("cb"), s + 1),
-            lambda ent: _pq_subdist(sl, ent["c"]),
-        )
-
-    nested = _pq_codebook_nested(cb, n_sub)
-    lutf = (
-        qprobe.crossJoin(F.broadcast(nested))
-        .select(
-            "query_id",
-            "list_id",
-            F.array(*[lut_for(s) for s in range(n_sub)]).alias("lut"),
-        )
-    )
-
+    lut = _residual_lut(e, centroids, cb, n_probe, n_sub, sub_dim)
     # Null-safe equality on the probe join (r17): a plain inner join on
     # list_id makes the optimizer infer isnotnull(list_id) on the coded
     # side and push it below the encode projection, where it substitutes
-    # the whole argmin fold into a filter — the same full-corpus
-    # double-evaluation the carry_centroid change removes on the build
-    # side.  <=> has identical semantics here (no null list_id can exist
-    # on either side: lutf's come from a row_number window, coded's from
-    # an argmin over a non-empty codebook) but carries no notnull
-    # constraint, so the projection stays single-evaluation.  The planner
-    # still picks BroadcastHashJoin (EqualNullSafe is an equi-key).
-    adc = (
-        coded.join(
-            F.broadcast(lutf),
-            coded["list_id"].eqNullSafe(lutf["list_id"]),
-        )
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            _pq_adc_dist().alias("adc_dist"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    # the whole argmin fold into a filter — the full-corpus assignment
+    # math evaluated twice per row.  <=> carries no notnull constraint
+    # and is the same join as long as neither side holds a NULL list_id
+    # (tests/test_dedup_similarity.py pins that for the inline build,
+    # the staged build and an empty corpus).  The planner still picks
+    # BroadcastHashJoin (EqualNullSafe is an equi-key).
+    return _adc_topk(
+        coded.join(F.broadcast(lut), coded["list_id"].eqNullSafe(lut["list_id"])), k
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
+
+
+def _residual_index(
+    embeddings: DataFrame,
+    e: DataFrame,
+    n_lists: int,
+    codebook_k: int,
+    n_sub: int,
+    sub_dim: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Build the residual index from the sliced corpus ``e``:
+    ``(centroids, codebook, coded)`` with ``coded`` = (vid, list_id,
+    codes).  The one builder behind the inline and the staged residual
+    paths.
+
+    Each row's residual is ``v - centroid(list(v))`` with the centroid
+    carried out of the assignment argmin itself (``carry_centroid``): a
+    join back to the centroid table would let the optimizer push an
+    inferred ``isnotnull(list_id)`` below the projection — the argmin
+    fold evaluated twice per row.  Assignment -> residual -> encode is
+    one map pass over the corpus.  The fine-codebook seeds are the
+    codebook_k smallest-vid residuals PAST the coarse seeds (whose
+    residuals are identically zero), a property of ``n_lists +
+    codebook_k`` rows only, so those rows are cut BEFORE the argmin
+    math — TakeOrdered by vid commutes with the row-local residual."""
+    centroids = seeded_centroids(embeddings, n_lists, id_col, vec_col)
+
+    def residuals(rows: DataFrame) -> DataFrame:
+        asg = assign_to_centroids(
+            rows, centroids, id_col="vid", vec_col="v", cluster_col="list_id",
+            carry_centroid="__cent",
+        )
+        return asg.select(
+            "vid", "list_id", F.zip_with("v", "__cent", lambda a, b: a - b).alias("v")
+        )
+
+    seed_rows = e.orderBy("vid").limit(n_lists + codebook_k)
+    cb = _pq_codebook(residuals(seed_rows), n_sub, sub_dim, codebook_k, skip=n_lists)
+    return centroids, cb, _pq_encode(residuals(e), cb, n_sub, sub_dim, "vid", "list_id")
+
+
+def _residual_lut(
+    e: DataFrame, centroids: DataFrame, cb: DataFrame, n_probe: int, n_sub: int, sub_dim: int
+) -> DataFrame:
+    """Residual LUT per (query, probed list): the coarse probe carries
+    each query's residual ``qr = q - centroid(list)``, and
+    ``lut[s][cid] = ||qr_s - c||^2``.  Returns (query_id, list_id, lut)."""
+    q = e.filter(F.col("is_q")).select(F.col("vid").alias("query_id"), F.col("v").alias("qv"))
+    qr = F.zip_with(F.col("qv"), F.col("centroid"), lambda a, b: a - b).alias("qr")
+    probe = _coarse_probe(q, centroids, n_probe, qr)
+    return _pq_lut(probe, cb, n_sub, sub_dim, "qr", "query_id", "list_id")

@@ -293,80 +293,38 @@ def _staged_ivf_index(spark, sf_dir, n_lists=16, seed=7):
     """Train the IVF index ONCE per (corpus fingerprint, params) and
     persist both tables from the same fitted model — two separately-cached
     trainings could disagree (k-means float sums depend on partitioning),
-    which would pair assignments with foreign centroids.  Both tables live
-    under ONE stage directory published with a single atomic rename
-    (staging.publish_dir), so no interleaving of writers can ever mix
-    assignments from fit A with centroids from fit B."""
-    import os
+    which would pair assignments with foreign centroids; one stage, one
+    atomic publish (``staging.staged_tables``)."""
+    from .sources.staging import source_fingerprint, stage_params_key, staged_tables
 
-    from .sources.staging import (
-        STAGE_ROOT,
-        STAGE_VERSION,
-        publish_dir,
-        read_stage_parquet,
-        source_fingerprint,
-        stage_params_key,
+    return staged_tables(
+        spark,
+        f"ivf_{stage_params_key('ivf', n_lists, seed)}",
+        source_fingerprint(sf_dir, "embeddings"),
+        ("assign", "centroids"),
+        lambda: train_ivf(_clean_emb(spark, sf_dir), n_lists=n_lists, seed=seed),
     )
-
-    fp = source_fingerprint(sf_dir, "embeddings")
-    pk = stage_params_key("ivf", n_lists, seed)
-    root = os.path.join(STAGE_ROOT, f"ivf_{pk}_{fp}_{STAGE_VERSION}")
-    a_path = os.path.join(root, "assign")
-    c_path = os.path.join(root, "centroids")
-    done = all(
-        os.path.exists(os.path.join(p, "_SUCCESS")) for p in (a_path, c_path)
-    )
-    if not done:
-        emb = _clean_emb(spark, sf_dir)
-        assignments, centroids = train_ivf(emb, n_lists=n_lists, seed=seed)
-        tmp = f"{root}.build{os.getpid()}"
-        assignments.write.mode("overwrite").parquet(os.path.join(tmp, "assign"))
-        centroids.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        # centroids is written LAST, so its marker proves a complete stage.
-        publish_dir(tmp, root, marker="centroids/_SUCCESS")
-    return read_stage_parquet(spark, a_path), read_stage_parquet(spark, c_path)
 
 
 def _staged_pq_index(spark, sf_dir, n_sub=4, codebook_k=4):
     """Encode the PQ pair ONCE per (corpus fingerprint, params) and
     persist both tables — (vid, codes array<long>) and the long codebook
-    (s, cid, c) — from the same build, under ONE atomically-published
-    stage dir (the _staged_ivf_index recipe; a codes table paired with a
-    foreign codebook would ADC against the wrong centroids).  This is the
-    train-once/probe-many artifact of the 100 TB ANN story: at scale the
-    code table (n_sub small ints per vector) replaces the float corpus at
-    query time, and the probe-side plan never reads a corpus float or
-    re-runs the encode."""
-    import os
-
+    (s, cid, c) — from the same build under one stage (a codes table
+    paired with a foreign codebook would ADC against the wrong
+    centroids).  This is the train-once/probe-many artifact of the
+    100 TB ANN story: at scale the code table (n_sub small ints per
+    vector) replaces the float corpus at query time, and the probe-side
+    plan never reads a corpus float or re-runs the encode."""
     from .operators.similarity import train_pq
-    from .sources.staging import (
-        STAGE_ROOT,
-        STAGE_VERSION,
-        publish_dir,
-        read_stage_parquet,
-        source_fingerprint,
-        stage_params_key,
-    )
+    from .sources.staging import source_fingerprint, stage_params_key, staged_tables
 
-    fp = source_fingerprint(sf_dir, "embeddings")
-    pk = stage_params_key("pq", n_sub, codebook_k)
-    root = os.path.join(STAGE_ROOT, f"pq_{pk}_{fp}_{STAGE_VERSION}")
-    codes_path = os.path.join(root, "codes")
-    cb_path = os.path.join(root, "codebook")
-    done = all(
-        os.path.exists(os.path.join(p, "_SUCCESS"))
-        for p in (codes_path, cb_path)
+    return staged_tables(
+        spark,
+        f"pq_{stage_params_key('pq', n_sub, codebook_k)}",
+        source_fingerprint(sf_dir, "embeddings"),
+        ("codes", "codebook"),
+        lambda: train_pq(_clean_emb(spark, sf_dir), n_sub=n_sub, codebook_k=codebook_k),
     )
-    if not done:
-        emb = _clean_emb(spark, sf_dir)
-        codes, cb = train_pq(emb, n_sub=n_sub, codebook_k=codebook_k)
-        tmp = f"{root}.build{os.getpid()}"
-        codes.write.mode("overwrite").parquet(os.path.join(tmp, "codes"))
-        cb.write.mode("overwrite").parquet(os.path.join(tmp, "codebook"))
-        # codebook is written LAST, so its marker proves a complete stage.
-        publish_dir(tmp, root, marker="codebook/_SUCCESS")
-    return read_stage_parquet(spark, codes_path), read_stage_parquet(spark, cb_path)
 
 
 @register(
@@ -1147,9 +1105,7 @@ def x3_pq_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import pq_adc_topk, train_pq
 
     emb = _clean_emb(spark, sf_dir)
-    pq_index = train_pq(
-        emb, n_sub=4, codebook_k=4, lloyd_iters=2, train_sample=4096
-    )
+    pq_index = train_pq(emb, n_sub=4, codebook_k=4, lloyd_iters=2)
     return pq_adc_topk(
         emb, F.col("vec_id") < 10, n_sub=4, k=5, pq_index=pq_index
     )
@@ -1280,29 +1236,20 @@ def _incremental_index_rows(
     """Raw ``(vec_id, embedding, ...)`` rows → index rows ``(vec_id,
     list_id, c0..c{n_sub-1})`` against FROZEN artifacts: coarse assignment
     via ``assign_to_centroids`` (argmin over the broadcast centroid
-    array, zero shuffle) and PQ codes via the ``_pq_code_col`` encode
-    expression against the broadcast nested codebook.  Works identically
-    on a batch frame (base-index build) and a STREAMING frame (the
-    incremental append): both static sides join in as broadcast one-row
-    arrays — the stream-static join shape — so base rows and streamed
-    rows can never be indexed by different arithmetic."""
-    from .operators.similarity import (
-        _pq_code_col,
-        _pq_codebook_nested,
-        assign_to_centroids,
-    )
+    array, zero shuffle) and PQ codes via the shared ``_pq_encode``
+    against the broadcast nested codebook.  Works identically on a batch
+    frame (base-index build) and a STREAMING frame (the incremental
+    append): both static sides join in as broadcast one-row arrays — the
+    stream-static join shape — so base rows and streamed rows can never
+    be indexed by different arithmetic."""
+    from .operators.similarity import _pq_encode, assign_to_centroids
 
     assigned = assign_to_centroids(
         rows, cents, cluster_col="list_id", centroid_col="centroid"
     )
-    nested = _pq_codebook_nested(cb, n_sub)
-    return assigned.crossJoin(F.broadcast(nested)).select(
-        "vec_id",
-        "list_id",
-        *[
-            _pq_code_col(F.col("__v"), s, sub_dim).alias(f"c{s}")
-            for s in range(n_sub)
-        ],
+    coded = _pq_encode(assigned, cb, n_sub, sub_dim, "vec_id", "list_id", vec="__v")
+    return coded.select(
+        "vec_id", "list_id", *[F.col("codes")[s].alias(f"c{s}") for s in range(n_sub)]
     )
 
 
@@ -1312,86 +1259,55 @@ def _staged_incremental_base(
     """Build the FROZEN index artifacts over the BASE corpus slice
     (vec_id % 4 != 3) once per (corpus fingerprint, params) and persist
     all three tables — centroids, codebook, and the base index rows —
-    under ONE atomically-published stage dir (the _staged_ivf_index
-    recipe).  The incremental query only ever READS these: new arrivals
-    are assigned/encoded against them with no retrain, the
+    under one stage.  The incremental query only ever READS these: new
+    arrivals are assigned/encoded against them with no retrain, the
     train-once/refresh-on-ingest contract of a production ANN pipeline."""
-    import os
+    from .operators.similarity import _validate_pq_index
+    from .sources.staging import source_fingerprint, stage_params_key, staged_tables
 
-    from .operators.similarity import (
-        _pq_codebook,
-        _pq_sliced_corpus,
-        seeded_centroids,
-    )
-    from .sources.staging import (
-        STAGE_ROOT,
-        STAGE_VERSION,
-        publish_dir,
-        read_stage_parquet,
-        source_fingerprint,
-        stage_params_key,
-    )
+    def build():
+        from .operators.similarity import (
+            _pq_codebook,
+            _pq_sliced_corpus,
+            seeded_centroids,
+        )
 
-    fp = source_fingerprint(sf_dir, "embeddings")
+        base = _clean_emb(spark, sf_dir).filter((F.col("vec_id") % 4) != 3)
+        e_base, sub_dim = _pq_sliced_corpus(
+            base, F.lit(False), n_sub, dim, "vec_id", "embedding"
+        )
+        return [
+            seeded_centroids(base, n_lists=n_lists),
+            _pq_codebook(e_base, n_sub, sub_dim, codebook_k),
+            # base_index is derived from the staged centroids/codebook,
+            # so it is provably a function of the frozen artifacts.
+            lambda cents, cb: _incremental_index_rows(base, cents, cb, n_sub, sub_dim),
+        ]
+
     # dim is part of the key: a stage built at another dim would hold
     # codes/codebook slices of a different sub_dim, and reusing it would
     # produce wrong codes with no error (round-12 ADVICE fix).
-    pk = stage_params_key("ivfincr", n_lists, n_sub, codebook_k, dim)
-    root = os.path.join(STAGE_ROOT, f"ivfincr_{pk}_{fp}_{STAGE_VERSION}")
-    paths = {
-        name: os.path.join(root, name)
-        for name in ("centroids", "codebook", "base_index")
-    }
-    done = all(
-        os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths.values()
+    cents, cb, base_index = staged_tables(
+        spark,
+        f"ivfincr_{stage_params_key('ivfincr', n_lists, n_sub, codebook_k, dim)}",
+        source_fingerprint(sf_dir, "embeddings"),
+        ("centroids", "codebook", "base_index"),
+        build,
     )
-    if not done:
-        base = _clean_emb(spark, sf_dir).filter((F.col("vec_id") % 4) != 3)
-        cents = seeded_centroids(base, n_lists=n_lists)
-        e_base, _, sub_dim = _pq_sliced_corpus(
-            base, F.lit(False), n_sub, dim, "vec_id", "embedding"
-        )
-        cb = _pq_codebook(e_base, n_sub, sub_dim, codebook_k)
-        tmp = f"{root}.build{os.getpid()}"
-        cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        cb.write.mode("overwrite").parquet(os.path.join(tmp, "codebook"))
-        base_index = _incremental_index_rows(
-            base,
-            spark.read.parquet(os.path.join(tmp, "centroids")),
-            spark.read.parquet(os.path.join(tmp, "codebook")),
-            n_sub,
-            sub_dim,
-        )
-        # base_index is written LAST — and from the just-written frozen
-        # artifacts, not the in-memory lineage, so the staged index is
-        # provably a function of the staged centroids/codebook.
-        base_index.write.mode("overwrite").parquet(
-            os.path.join(tmp, "base_index")
-        )
-        publish_dir(tmp, root, marker="base_index/_SUCCESS")
-    cb_staged = read_stage_parquet(spark, paths["codebook"])
-    base_staged = read_stage_parquet(spark, paths["base_index"])
     # Geometry-validate the staged codebook like the other prebuilt-index
-    # paths (pq_adc_topk / ivf_pq_topk) — a stale or foreign stage must
-    # fail loudly, not ADC against mismatched slices (round-12 ADVICE).
-    # The staged base-index codes ride along so a TRUNCATED codebook
-    # (codes referencing cids past the LUT) is caught too.
-    from .operators.similarity import _validate_pq_index
-
+    # paths — a stale or foreign stage must fail loudly, not ADC against
+    # mismatched slices (round-12 ADVICE).  The base-index codes ride
+    # along so a TRUNCATED codebook (codes past the LUT) is caught too.
     _validate_pq_index(
-        cb_staged,
+        cb,
         n_sub,
         dim // n_sub,
         codebook_k,
-        codes=base_staged.select(
+        codes=base_index.select(
             F.array(*[f"c{i}" for i in range(n_sub)]).alias("codes")
         ),
     )
-    return (
-        read_stage_parquet(spark, paths["centroids"]),
-        cb_staged,
-        base_staged,
-    )
+    return cents, cb, base_index
 
 
 def _stage_new_embedding_chunks(spark, sf_dir, chunks: int = 2) -> str:
@@ -1438,8 +1354,8 @@ def _stage_new_embedding_chunks(spark, sf_dir, chunks: int = 2) -> str:
     "embeddings stream in micro-batches and are folded into the index "
     "against the FROZEN staged artifacts — coarse assignment is a "
     "stream-static broadcast argmin over the staged centroids, PQ codes "
-    "a stream-static join against the staged nested codebook (the exact "
-    "_pq_encode expression, shared via _pq_code_col) — appended in "
+    "a stream-static join against the staged nested codebook (the "
+    "shared _pq_encode the batch builds use) — appended in "
     "update-free append mode (per-row, no state).  Result = staged base "
     "index UNION streamed increments, and the oracle is the from-scratch "
     "BATCH index over the union corpus, so the hash gate IS the "
@@ -1663,65 +1579,28 @@ def _staged_residual_index(
     """Build the residual-encoding index ONCE per (corpus fingerprint,
     params) and persist all FOUR artifacts — assignments (vid, list_id),
     centroids (list_id, centroid), codes (vid, codes), codebook
-    (s, cid, c) — from the same build under ONE atomically-published
-    stage dir (the _staged_ivf_index recipe; assignments paired with
-    foreign centroids would subtract the wrong residual from every
-    vector, and a codes table paired with a foreign codebook would ADC
-    against the wrong entries).  Residual artifacts compose pairwise, so
-    the all-four-or-nothing publish matters twice here."""
-    import os
+    (s, cid, c) — from one build of the shared residual builder under one
+    stage (assignments paired with foreign centroids would subtract the
+    wrong residual from every vector, and a codes table paired with a
+    foreign codebook would ADC against the wrong entries)."""
+    from .sources.staging import source_fingerprint, stage_params_key, staged_tables
 
-    from .operators.similarity import (
-        _pq_codebook,
-        _pq_encode,
-        _pq_sliced_corpus,
-        assign_to_centroids,
-        seeded_centroids,
-    )
-    from .sources.staging import (
-        STAGE_ROOT,
-        STAGE_VERSION,
-        publish_dir,
-        read_stage_parquet,
-        source_fingerprint,
-        stage_params_key,
-    )
+    def build():
+        from .operators.similarity import _pq_sliced_corpus, _residual_index
 
-    fp = source_fingerprint(sf_dir, "embeddings")
-    pk = stage_params_key("ivfpq_residual", n_lists, n_sub, codebook_k, dim)
-    root = os.path.join(STAGE_ROOT, f"respq_{pk}_{fp}_{STAGE_VERSION}")
-    parts = {n: os.path.join(root, n) for n in ("assign", "centroids", "codes", "codebook")}
-    done = all(
-        os.path.exists(os.path.join(p, "_SUCCESS")) for p in parts.values()
-    )
-    if not done:
         emb = _clean_emb(spark, sf_dir)
-        e, n_sub_v, sub_dim = _pq_sliced_corpus(
-            emb, F.lit(False), n_sub, dim, "vec_id", "embedding"
+        e, sub_dim = _pq_sliced_corpus(emb, F.lit(False), n_sub, dim, "vec_id", "embedding")
+        centroids, cb, coded = _residual_index(
+            emb, e, n_lists, codebook_k, n_sub, sub_dim, "vec_id", "embedding"
         )
-        centroids = seeded_centroids(emb, n_lists)
-        asg = assign_to_centroids(
-            e, centroids, id_col="vid", vec_col="v", cluster_col="list_id"
-        )
-        res = asg.join(F.broadcast(centroids), "list_id").select(
-            "vid",
-            "list_id",
-            F.zip_with("v", "centroid", lambda a, b: a - b).alias("v"),
-        )
-        cb = _pq_codebook(res, n_sub_v, sub_dim, codebook_k, skip=n_lists)
-        codes = _pq_encode(res.select("vid", "v"), cb, n_sub_v, sub_dim)
-        tmp = f"{root}.build{os.getpid()}"
-        asg.select("vid", "list_id").write.mode("overwrite").parquet(
-            os.path.join(tmp, "assign")
-        )
-        centroids.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        codes.write.mode("overwrite").parquet(os.path.join(tmp, "codes"))
-        cb.write.mode("overwrite").parquet(os.path.join(tmp, "codebook"))
-        # codebook is written LAST, so its marker proves a complete stage.
-        publish_dir(tmp, root, marker="codebook/_SUCCESS")
-    return tuple(
-        read_stage_parquet(spark, parts[n])
-        for n in ("assign", "centroids", "codes", "codebook")
+        return [coded.select("vid", "list_id"), centroids, coded.select("vid", "codes"), cb]
+
+    return staged_tables(
+        spark,
+        f"respq_{stage_params_key('ivfpq_residual', n_lists, n_sub, codebook_k, dim)}",
+        source_fingerprint(sf_dir, "embeddings"),
+        ("assign", "centroids", "codes", "codebook"),
+        build,
     )
 
 

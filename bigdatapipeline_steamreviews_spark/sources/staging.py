@@ -1,13 +1,16 @@
 """Content-fingerprinted /tmp staging for deterministic derived tables.
 
-Two consumers:
+Three consumers:
 
 * **streaming replay** (`queries_streaming.py`) stages the events table as
   time-ordered chunks once per source fingerprint;
 * **dedup signatures** (`queries_text.py`) materializes the MinHash
   signature / LSH band / shingle posting tables once per corpus
   fingerprint, so repeated runs (bench best-of-2, registry sweeps) join
-  from storage instead of recomputing k x |shingles| md5 per document.
+  from storage instead of recomputing k x |shingles| md5 per document;
+* **ANN indexes** (`queries_similarity.py`) persist each trained index's
+  paired tables (assignments + centroids, codes + codebook) as one stage
+  through :func:`staged_tables`.
 
 The second is not just a bench trick — it IS the 100 TB design: a real
 pipeline keeps the signature table materialized between dedup runs and
@@ -91,6 +94,7 @@ __all__ = [
     "STAGE_VERSION",
     "source_fingerprint",
     "staged_parquet",
+    "staged_tables",
     "stage_params_key",
     "publish_dir",
     "live_fingerprints",
@@ -356,6 +360,38 @@ def staged_parquet(
         build().write.mode("overwrite").parquet(tmp)
         publish_dir(tmp, path)
     return read_stage_parquet(spark, path)
+
+
+def staged_tables(
+    spark: SparkSession,
+    name: str,
+    fingerprint: str,
+    tables: "tuple[str, ...]",
+    build: Callable[[], list],
+) -> tuple:
+    """Multi-table :func:`staged_parquet`: materialize the frames
+    ``build()`` returns, one per entry of ``tables`` and in that order,
+    as subdirectories of ONE stage directory (named as in
+    :func:`staged_parquet`), and read every table back.  Tables that must pair
+    (an index's assignments and its centroids, codes and their codebook)
+    come from the same build and are published by one atomic rename, so
+    no reader ever mixes two builds.  The last table is written last, so
+    its ``_SUCCESS`` marks a complete stage.
+
+    A frame may instead be a function of the tables written before it,
+    read back from the build directory: the stage is then provably
+    derived from the staged bytes, not from a second evaluation of the
+    same lineage."""
+    root = os.path.join(STAGE_ROOT, f"{name}_{fingerprint}_{STAGE_VERSION}")
+    paths = [os.path.join(root, t) for t in tables]
+    if not all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths):
+        tmp = f"{root}.build{os.getpid()}"
+        for i, df in enumerate(build()):
+            if callable(df):
+                df = df(*[spark.read.parquet(os.path.join(tmp, t)) for t in tables[:i]])
+            df.write.mode("overwrite").parquet(os.path.join(tmp, tables[i]))
+        publish_dir(tmp, root, marker=f"{tables[-1]}/_SUCCESS")
+    return tuple(read_stage_parquet(spark, p) for p in paths)
 
 
 # Stage-dir schema memo (r17, the sources/tables.py pattern): staged

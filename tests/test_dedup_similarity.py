@@ -848,14 +848,40 @@ def test_ivf_pq_exhaustive_probe_equals_pq_adc(spark):
     assert plain, "fixture produced no neighbors"
 
 
+# Every entry point that derives an ANN index artifact — training,
+# seeding, assignment, codebooks, the encode and the shared residual
+# builder.  A persisted probe may reach none of them.
+_INDEX_BUILDERS = (
+    "train_ivf",
+    "train_pq",
+    "seeded_centroids",
+    "assign_to_centroids",
+    "_pq_codebook",
+    "_pq_lloyd_codebook",
+    "_pq_encode",
+    "_residual_index",
+)
+
+
+def _poison_index_builders(monkeypatch, message: str) -> None:
+    import bigdatapipeline_steamreviews_spark.operators.similarity as sim
+    from pyspark.ml.clustering import KMeans
+
+    def boom(*a, **k):
+        raise AssertionError(message)
+
+    for name in _INDEX_BUILDERS:
+        monkeypatch.setattr(sim, name, boom)
+    monkeypatch.setattr(KMeans, "fit", boom)
+
+
 def test_persisted_pq_probe_never_retrains(spark, monkeypatch):
     """x3_ivf_pq_persisted's contract (r9 verdict ask #3): with both
     staged artifacts present, the probe-side computation must not fit
-    k-means or re-run the PQ encode.  Poison every train entry point and
-    run the query end-to-end — completing proves the probe path reads
-    only the persisted tables; the plan must scan the staged codes
+    k-means or re-run the PQ encode.  Poison every index build entry
+    point and run the query end-to-end — completing proves the probe path
+    reads only the persisted tables; the plan must scan the staged codes
     parquet."""
-    import bigdatapipeline_steamreviews_spark.operators.similarity as sim
     from bigdatapipeline_steamreviews_spark.plans.lint import plan_text
     from bigdatapipeline_steamreviews_spark.queries_similarity import (
         _staged_ivf_index,
@@ -868,15 +894,7 @@ def test_persisted_pq_probe_never_retrains(spark, monkeypatch):
     _staged_ivf_index(spark, SF_DIR, n_lists=16, seed=7)
     _staged_pq_index(spark, SF_DIR, n_sub=4, codebook_k=4)
 
-    def boom(*a, **k):
-        raise AssertionError("probe path re-trained / re-encoded")
-
-    from pyspark.ml.clustering import KMeans
-
-    monkeypatch.setattr(sim, "train_ivf", boom)
-    monkeypatch.setattr(sim, "train_pq", boom)
-    monkeypatch.setattr(KMeans, "fit", boom)
-
+    _poison_index_builders(monkeypatch, "probe path re-trained / re-encoded")
     df = x3_ivf_pq_persisted(spark, SF_DIR)
     assert "/codes" in plan_text(df), "plan does not scan the staged codes"
     rows = df.collect()
@@ -1660,11 +1678,11 @@ def test_ivf_pq_residual_adc_is_reconstruction_distance(spark):
 def test_persisted_residual_probe_never_rebuilds(spark, monkeypatch):
     """x3_ivf_pq_residual_persisted's contract: with the staged 4-tuple
     present, the probe must re-derive NOTHING — poison every build entry
-    point (coarse seeding, corpus assignment, fine codebook, encode) and
-    the query must still run, its plan scanning the staged codes parquet;
-    and the persisted result must equal the inline build bitwise (every
-    construction is deterministic)."""
-    import bigdatapipeline_steamreviews_spark.operators.similarity as sim
+    point (coarse seeding, corpus assignment, fine codebook, encode, the
+    shared residual builder) and the query must still run, its plan
+    scanning the staged codes parquet; and the persisted result must
+    equal the inline build bitwise (every construction is
+    deterministic)."""
     from bigdatapipeline_steamreviews_spark.plans.lint import plan_text
     from bigdatapipeline_steamreviews_spark.queries_similarity import (
         _staged_residual_index,
@@ -1680,16 +1698,104 @@ def test_persisted_residual_probe_never_rebuilds(spark, monkeypatch):
         "query_id", "rank"
     ).collect()
 
-    def boom(*a, **k):
-        raise AssertionError("persisted probe re-derived an index artifact")
-
-    monkeypatch.setattr(sim, "seeded_centroids", boom)
-    monkeypatch.setattr(sim, "assign_to_centroids", boom)
-    monkeypatch.setattr(sim, "_pq_codebook", boom)
-    monkeypatch.setattr(sim, "_pq_encode", boom)
-
+    _poison_index_builders(monkeypatch, "persisted probe re-derived an index artifact")
     df = x3_ivf_pq_residual_persisted(spark, SF_DIR)
     assert "/codes" in plan_text(df), "plan does not scan the staged codes"
     persisted = df.orderBy("query_id", "rank").collect()
     assert persisted == inline
     assert len(persisted) == 50
+
+
+def test_coarse_probe_keeps_n_probe_lists_lower_list_id_on_ties(spark):
+    """The one coarse probe (IVF, IVF+PQ and residual IVF+PQ all call it)
+    keeps exactly ``n_probe`` lists per query, and a distance tie at the
+    cut goes to the LOWER list_id — the (dist, list_id) order the
+    oracles rank by.  Rows are listed higher-id-first so insertion order
+    cannot pass for the tie-break."""
+    from bigdatapipeline_steamreviews_spark.operators.similarity import (
+        _coarse_probe,
+    )
+
+    cents = spark.createDataFrame(
+        [(3, [0.0, -2.0]), (2, [1.0, 0.0]), (1, [2.0, 0.0]), (0, [0.0, 2.0])],
+        "list_id long, centroid array<double>",
+    )
+    # query 0 at the origin: list 2 at distance 1, lists 3/1/0 tied at 4.
+    # query 1 at (0.5, 1): lists 2/0 tied at 1.25, list 1 at 3.25, list 3
+    # at 9.25 (every distance exact in binary floating point).
+    q = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [0.5, 1.0])], "query_id long, qv array<double>"
+    )
+    expected = {
+        1: {0: {2}, 1: {0}},
+        2: {0: {2, 0}, 1: {0, 2}},
+        3: {0: {2, 0, 1}, 1: {0, 2, 1}},
+    }
+    for n_probe, want in expected.items():
+        got: dict = {}
+        for r in _coarse_probe(q, cents, n_probe).collect():
+            got.setdefault(r["query_id"], []).append(r["list_id"])
+        assert {qid: len(lists) for qid, lists in got.items()} == {0: n_probe, 1: n_probe}
+        assert {qid: set(lists) for qid, lists in got.items()} == want, n_probe
+
+
+def test_residual_probe_join_never_sees_null_list_id(spark, tmp_path):
+    """The residual ADC join uses ``<=>`` on list_id (so the optimizer
+    infers no isnotnull filter and the argmin fold runs once per row);
+    that is the same join as ``==`` only while neither the coded table
+    nor the LUT holds a NULL list_id.  Pin it for the inline build, the
+    staged build, and an empty corpus, by comparing the two joins."""
+    from bigdatapipeline_steamreviews_spark.operators import similarity as sim
+    from bigdatapipeline_steamreviews_spark.queries_similarity import (
+        _clean_emb,
+        _staged_residual_index,
+    )
+    from tests.conftest import SF_DIR
+
+    n_lists, n_sub, cb_k, dim = 16, 4, 4, 64
+    pred = F.col("vec_id") < 10
+
+    def sliced(emb):
+        return sim._pq_sliced_corpus(emb, pred, n_sub, dim, "vec_id", "embedding")
+
+    def check(coded, centroids, cb, e, sub_dim, nonempty):
+        lut = sim._residual_lut(e, centroids, cb, n_lists, n_sub, sub_dim)
+        for side in (coded, lut):
+            assert side.filter(F.col("list_id").isNull()).count() == 0
+        cols = [coded["vid"], lut["query_id"], coded["list_id"]]
+        eq = coded.join(lut, coded["list_id"] == lut["list_id"]).select(cols)
+        ns = coded.join(lut, coded["list_id"].eqNullSafe(lut["list_id"])).select(cols)
+        eq_rows, ns_rows = sorted(eq.collect()), sorted(ns.collect())
+        assert eq_rows == ns_rows
+        assert bool(eq_rows) == nonempty
+
+    emb = _clean_emb(spark, SF_DIR)
+    e, sub_dim = sliced(emb)
+    centroids, cb, coded = sim._residual_index(
+        emb, e, n_lists, cb_k, n_sub, sub_dim, "vec_id", "embedding"
+    )
+    check(coded, centroids, cb, e, sub_dim, nonempty=True)
+
+    asg, centroids, codes, cb = _staged_residual_index(
+        spark, SF_DIR, n_lists=n_lists, n_sub=n_sub, codebook_k=cb_k
+    )
+    coded = codes.join(asg.select("vid", "list_id"), "vid")
+    check(coded, centroids, cb, e, sub_dim, nonempty=True)
+
+    # Empty corpus: an embeddings table with no rows, built inline and
+    # staged (an empty stage is a legitimate 4-tuple of empty tables).
+    empty_dir = str(tmp_path / "sf_empty")
+    spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(0).coalesce(1).write.parquet(
+        f"{empty_dir}/embeddings.parquet"
+    )
+    empty = _clean_emb(spark, empty_dir)
+    e, sub_dim = sliced(empty)
+    centroids, cb, coded = sim._residual_index(
+        empty, e, n_lists, cb_k, n_sub, sub_dim, "vec_id", "embedding"
+    )
+    check(coded, centroids, cb, e, sub_dim, nonempty=False)
+    asg, centroids, codes, cb = _staged_residual_index(
+        spark, empty_dir, n_lists=n_lists, n_sub=n_sub, codebook_k=cb_k
+    )
+    coded = codes.join(asg.select("vid", "list_id"), "vid")
+    check(coded, centroids, cb, e, sub_dim, nonempty=False)
