@@ -18,6 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdatapipeline_steamreviews_spark import get_spark, queries  # noqa: E402
+from perfbench.stats import steal_pct, steal_ticks  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -87,36 +88,6 @@ BENCH_QUERIES = [
 ]
 
 
-def _cpu_ticks() -> tuple[int, int, int] | None:
-    """(busy, idle-ish, steal) jiffies from /proc/stat, or None off-Linux.
-
-    Steal is the direct instrument for the 'noisy regime' mystery that ran
-    from r14 to r16: whole bench sessions inflate 1.2-1.5x while loadavg
-    reads ~0, because the HYPERVISOR is giving this VM's vCPUs to a
-    co-tenant — r16 measured 33% steal-of-busy during a flagship run on an
-    otherwise idle box.  Loadavg cannot see it; /proc/stat's steal field
-    counts exactly those involuntary-wait ticks, so each query's samples
-    now carry the contention that produced them."""
-    try:
-        parts = open("/proc/stat").readline().split()
-        v = [int(x) for x in parts[1:]]
-        busy = sum(v) - v[3] - v[4]  # minus idle, iowait
-        return busy, v[3] + v[4], v[7]
-    except (OSError, IndexError, ValueError):
-        return None
-
-
-def _steal_pct(before, after) -> float | None:
-    """Steal as % of this window's busy demand (the busy sum above already
-    counts steal ticks, so the quotient is steal / (work done + work
-    withheld))."""
-    if before is None or after is None:
-        return None
-    busy = after[0] - before[0]
-    steal = after[2] - before[2]
-    return round(100.0 * steal / busy, 1) if busy > 0 else None
-
-
 def build_output(
     per_query: dict[str, float],
     errors: dict[str, str],
@@ -160,7 +131,7 @@ def build_output(
 
 
 # The driver records only the LAST 2000 characters of stdout and parses the
-# final JSON line; BENCH_r08's artifact was truncated mid-JSON because the
+# final JSON line; the round-8 artifact was truncated mid-JSON because the
 # samples-laden line had grown past the cap (r8 verdict ask #7).  The stdout
 # line must therefore stay compact; the full artifact (samples, spread,
 # untruncated errors) goes to a sidecar file.
@@ -236,80 +207,34 @@ def main() -> None:
     except Exception as e:  # noqa: BLE001 - record and continue
         errors["__warmup__"] = f"{type(e).__name__}: {e}"[:300]
 
-    # Close-stamp subsetting (r14 verdict ask #5): the one-query-per-
-    # process close protocol (scripts/bench_close.py) runs bench.py once
-    # per query so a noisy host window can poison at most one query's
-    # samples.  The env var is a comma list of names; unset = full set.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    names = (
-        [n for n in BENCH_QUERIES if n in {s.strip() for s in only.split(",")}]
-        if only
-        else BENCH_QUERIES
-    )
-    if only:
-        # Unknown names must be loud (r15 ADVICE bench_close.py:119): a
-        # typo'd subset used to intersect to an empty run that LOOKED
-        # like a fast bench; an empty selection is always an error.
-        unknown = {s.strip() for s in only.split(",")} - set(BENCH_QUERIES)
-        if unknown:
-            print(
-                "bench: unknown names in SPARK_GRAFT_BENCH_ONLY: "
-                + ", ".join(sorted(unknown)),
-                file=sys.stderr,
-            )
-        if not names:
-            sys.exit(2)
-
     per_query: dict[str, float] = {}
     samples: dict[str, list] = {}
+    # Hypervisor steal per query and per run (/proc/stat): loadavg cannot
+    # see a co-tenant taking this VM's vCPUs, so each window carries the
+    # steal it was measured under.  The sidecar gets the per-query map; the
+    # compact stdout line keeps the run-level number and a summary.
     steal: dict[str, float] = {}
-    run_t0 = _cpu_ticks()
-    for name in names:
-        q_t0 = _cpu_ticks()
+    run_t0 = steal_ticks()
+    for name in BENCH_QUERIES:
+        q_t0 = steal_ticks()
         try:
             per_query[name], samples[name] = run(name)
         except Exception as e:  # noqa: BLE001 - record and continue
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             samples.pop(name, None)
-        pct = _steal_pct(q_t0, _cpu_ticks())
-        if pct is not None:
-            steal[name] = pct
+        steal[name] = round(steal_pct(q_t0, steal_ticks()), 1)
 
-    out = build_output(per_query, errors, len(names), SF_DIR, samples)
-    # Contention evidence rides the artifact (sidecar gets the per-query
-    # map; the compact stdout line keeps only the run-level number).
-    run_steal = _steal_pct(run_t0, _cpu_ticks())
-    if steal:
-        out["steal_pct"] = steal
-    if run_steal is not None:
-        out["run_steal_pct"] = run_steal
-    # Full artifact (samples + spread + untruncated errors) to a sidecar
-    # file; the committed BENCH_r{N}_close.json is a copy of this.
-    full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FULL",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_last_full.json"),
-    )
+    out = build_output(per_query, errors, len(BENCH_QUERIES), SF_DIR, samples)
+    out["steal_pct"] = steal
+    out["run_steal_pct"] = round(steal_pct(run_t0, steal_ticks()), 1)
+    # Full artifact (samples + spread + untruncated errors) to a sidecar.
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_last_full.json")
     try:
         with open(full_path, "w") as f:
             json.dump(out, f)
             f.write("\n")
     except OSError as e:
         print(f"bench: could not write full artifact: {e}", file=sys.stderr)
-    # Append-only history (one JSON line per run): re-running bench to
-    # find a quiet window OVERWRITES the sidecar, and round 14 lost its
-    # best run's samples exactly that way — the history makes every
-    # attempt's full artifact recoverable when picking the stamp.  Lives
-    # under the repo (git-ignored), NOT a fixed world-writable /tmp name
-    # a co-tenant could pre-create or symlink (r14 ADVICE bench.py:217).
-    try:
-        hist = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".bench_history.jsonl"
-        )
-        with open(hist, "a") as f:
-            json.dump(out, f)
-            f.write("\n")
-    except OSError:
-        pass
     # ONE compact JSON line, last on stdout: the driver keeps only the final
     # 2000 characters, so this line alone must parse (r8 ask #7).
     print(json.dumps(compact_output(out)))

@@ -990,8 +990,9 @@ def assign_to_centroids(
     operator already holds AND lets the optimizer push the inner join's
     inferred ``isnotnull(cluster)`` below the projection, where it
     substitutes the whole argmin expression into a join condition — the
-    full-corpus assignment fold evaluated TWICE per row (r17 plan audit:
-    plans/r17/x3_ivf_pq_residual_before.txt ops 15-16).  The argmin
+    full-corpus assignment fold evaluated TWICE per row (r17 plan audit,
+    ops 15-16 of the residual plan; the captured plans are in git
+    history at 0e10fe3).  The argmin
     struct gains the centroid as its LAST field, strictly after the
     (distance, cluster) pair that already totally orders the entries, so
     the picked centroid is exactly the one the join would have fetched.
@@ -1283,7 +1284,8 @@ def _pq_sliced_corpus(
     plain-ADC path's per-row math (4x4 sub-distances per vector) is an
     order of magnitude lighter than the IVF paths' coarse argmin, so the
     round-robin exchange costs more than the fan-out buys there —
-    measured by an in-session alternating A/B (OPTIMIZATION_r17.md)."""
+    measured by an in-session alternating A/B (PERF.md, negative
+    results)."""
     if n_sub < 1 or dim % n_sub != 0:
         raise ValueError(
             f"n_sub must be >= 1 and divide dim: n_sub={n_sub}, dim={dim}"
@@ -1734,7 +1736,7 @@ def pq_adc_topk(
     (n_sub x codebook_k tiny sub-distances) is too light to pay for the
     round-robin exchange, the same evidence class that reverted the
     ``cosine_topk_bucketed`` spread in r16; decided by an in-session
-    alternating A/B (OPTIMIZATION_r17.md).  Placement-only either way —
+    alternating A/B (PERF.md, negative results).  Placement-only either way —
     results are bitwise identical.
     """
     e, sub_dim = _pq_sliced_corpus(

@@ -305,8 +305,8 @@ def run_to_memory_table(
     the r17 scale-parameterization rule: the provider is a DEPLOYMENT
     setting, not a query property.  The local default is measured, not
     assumed: an in-session alternating A/B on the sessionization replay
-    (3 reps, two of them at 0.2-1.8% hypervisor steal; OPTIMIZATION_
-    r17.md) put RocksDB+changelog at wall parity with the HDFS-backed
+    (3 reps, two of them at 0.2-1.8% hypervisor steal; PERF.md,
+    state provider) put RocksDB+changelog at wall parity with the HDFS-backed
     store (min 5.43 vs 5.52 s, commit-time sum 2.2 vs 2.7 s per run) —
     at 1,500 fixed-width state rows the store never leaves the
     in-memory map regime, so the sandbox keeps the simpler provider,

@@ -10,7 +10,6 @@ complete run.
 from __future__ import annotations
 
 import json
-import os
 
 from bench import BENCH_QUERIES, STDOUT_BYTE_BUDGET, build_output, compact_output
 
@@ -81,7 +80,7 @@ def test_samples_are_optional_for_backward_shape():
 
 def test_stdout_line_fits_driver_tail_capture():
     """r8 verdict ask #7: the driver keeps only the last 2000 characters of
-    stdout, and BENCH_r08.json was truncated mid-JSON (``"parsed": null``)
+    stdout, and the round-8 artifact was truncated mid-JSON (``"parsed": null``)
     because the samples-laden line outgrew that cap.  The compact stdout
     line for the FULL current bench set — worst-case 4-digit seconds per
     query — must parse on its own and fit the capture window."""
@@ -132,34 +131,3 @@ def test_compact_output_carries_steal_summary_within_budget():
     assert slim["run_steal_pct"] == 7.5
     assert len(json.dumps(slim)) + 1 <= STDOUT_BYTE_BUDGET
 
-
-def test_bench_close_gate_refuses_stolen_whole_run(tmp_path):
-    """scripts/bench_close.py --gate: a whole-run artifact measured over
-    the steal gate is refused as a stamp; a clean run or a
-    min-over-sessions composite passes (r17 verdict ask #2)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_close",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "bench_close.py"),
-    )
-    bc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bc)
-
-    def art(path, payload):
-        with open(path, "w") as f:
-            json.dump(payload, f)
-        return str(path)
-
-    assert bc.gate_artifact(art(tmp_path / "stolen.json", {"run_steal_pct": 35.5})) == 1
-    assert bc.gate_artifact(art(tmp_path / "clean.json", {"run_steal_pct": 1.8})) == 0
-    assert bc.gate_artifact(art(tmp_path / "noinstr.json", {"value": 1.0})) == 1
-    assert (
-        bc.gate_artifact(
-            art(
-                tmp_path / "composite.json",
-                {"protocol": "per-query min over 18 sessions"},
-            )
-        )
-        == 0
-    )

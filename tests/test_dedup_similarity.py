@@ -875,6 +875,13 @@ def _poison_index_builders(monkeypatch, message: str) -> None:
     monkeypatch.setattr(KMeans, "fit", boom)
 
 
+def _scans_staged_codes(df) -> bool:
+    """Whether ``df`` reads a staged ``codes`` table.  Asked of the scan's
+    input files, not of the plan text, whose scan ``Location`` is cut at
+    100 characters and so loses the table name under a long temp root."""
+    return any(f.rstrip("/").split("/")[-2] == "codes" for f in df.inputFiles())
+
+
 def test_persisted_pq_probe_never_retrains(spark, monkeypatch):
     """x3_ivf_pq_persisted's contract (r9 verdict ask #3): with both
     staged artifacts present, the probe-side computation must not fit
@@ -882,7 +889,6 @@ def test_persisted_pq_probe_never_retrains(spark, monkeypatch):
     point and run the query end-to-end — completing proves the probe path
     reads only the persisted tables; the plan must scan the staged codes
     parquet."""
-    from bigdatapipeline_steamreviews_spark.plans.lint import plan_text
     from bigdatapipeline_steamreviews_spark.queries_similarity import (
         _staged_ivf_index,
         _staged_pq_index,
@@ -896,7 +902,7 @@ def test_persisted_pq_probe_never_retrains(spark, monkeypatch):
 
     _poison_index_builders(monkeypatch, "probe path re-trained / re-encoded")
     df = x3_ivf_pq_persisted(spark, SF_DIR)
-    assert "/codes" in plan_text(df), "plan does not scan the staged codes"
+    assert _scans_staged_codes(df), "plan does not scan the staged codes"
     rows = df.collect()
     assert len(rows) > 0
     assert {r["rank"] for r in rows} <= {1, 2, 3, 4, 5}
@@ -1683,7 +1689,6 @@ def test_persisted_residual_probe_never_rebuilds(spark, monkeypatch):
     scanning the staged codes parquet; and the persisted result must
     equal the inline build bitwise (every construction is
     deterministic)."""
-    from bigdatapipeline_steamreviews_spark.plans.lint import plan_text
     from bigdatapipeline_steamreviews_spark.queries_similarity import (
         _staged_residual_index,
         x3_ivf_pq_residual,
@@ -1700,7 +1705,7 @@ def test_persisted_residual_probe_never_rebuilds(spark, monkeypatch):
 
     _poison_index_builders(monkeypatch, "persisted probe re-derived an index artifact")
     df = x3_ivf_pq_residual_persisted(spark, SF_DIR)
-    assert "/codes" in plan_text(df), "plan does not scan the staged codes"
+    assert _scans_staged_codes(df), "plan does not scan the staged codes"
     persisted = df.orderBy("query_id", "rank").collect()
     assert persisted == inline
     assert len(persisted) == 50
