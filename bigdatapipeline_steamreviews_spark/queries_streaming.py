@@ -1164,6 +1164,37 @@ def stream_serving_materialization(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.read.parquet(table_dir)
 
 
+def _transition_matrix(steps: DataFrame) -> DataFrame:
+    """(from, to) counts of materialized transition steps, each with its
+    share of the from-state's steps."""
+    from pyspark.sql import Window as W
+
+    counts = steps.groupBy("from_state", "to_state").agg(
+        F.count(F.lit(1)).alias("n_transitions")
+    )
+    per_from = W.partitionBy("from_state")
+    return counts.select(
+        "*",
+        (
+            F.col("n_transitions").cast("double")
+            / F.sum("n_transitions").over(per_from).cast("double")
+        ).alias("p_transition"),
+    )
+
+
+def _last_ewma_per_user(trajectory: DataFrame) -> DataFrame:
+    """Each user's final running EWMA: the trajectory row with the largest
+    ``n_seen``."""
+    from pyspark.sql import Window as W
+
+    last = W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
+    return (
+        trajectory.withColumn("__rn", F.row_number().over(last))
+        .filter(F.col("__rn") == 1)
+        .select("user_id", "ewma", F.col("n_seen").alias("n_events"))
+    )
+
+
 @register(
     "stream_event_transitions",
     """
@@ -1194,9 +1225,6 @@ FROM c
     "batch SQL verbatim.",
 )
 def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window as W
-
     from .streaming.transitions import streaming_transitions
 
     stream = _events_replay(spark, sf_dir)
@@ -1211,17 +1239,7 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps = replay_to_memory_table(
         result, "stream_transitions", "append", shuffle_partitions=16
     )
-    counts = steps.groupBy("from_state", "to_state").agg(
-        F.count(F.lit(1)).alias("n_transitions")
-    )
-    per_from = W.partitionBy("from_state")
-    return counts.select(
-        "*",
-        (
-            F.col("n_transitions").cast("double")
-            / F.sum("n_transitions").over(per_from).cast("double")
-        ).alias("p_transition"),
-    )
+    return _transition_matrix(steps)
 
 
 @register(
@@ -1247,8 +1265,6 @@ GROUP BY user_id
     "never be.",
 )
 def stream_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from .streaming.ewma import streaming_ewma
 
     stream = _events_replay(spark, sf_dir).filter(
@@ -1258,12 +1274,7 @@ def stream_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory = replay_to_memory_table(
         result, "stream_ewma", "append", shuffle_partitions=16
     )
-    last = W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
-    return (
-        trajectory.withColumn("__rn", F.row_number().over(last))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "ewma", F.col("n_seen").alias("n_events"))
-    )
+    return _last_ewma_per_user(trajectory)
 
 
 @register(
@@ -1933,8 +1944,6 @@ FROM c
     "matrix over them matches the oracle bitwise.",
 )
 def stream_transitions_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from .streaming.transitions import streaming_transitions_disordered
 
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
@@ -1948,17 +1957,7 @@ def stream_transitions_disordered(spark: SparkSession, sf_dir: str) -> DataFrame
     steps = replay_to_memory_table(
         result, "stream_transitions_dis", "append", shuffle_partitions=16
     )
-    counts = steps.groupBy("from_state", "to_state").agg(
-        F.count(F.lit(1)).alias("n_transitions")
-    )
-    per_from = W.partitionBy("from_state")
-    return counts.select(
-        "*",
-        (
-            F.col("n_transitions").cast("double")
-            / F.sum("n_transitions").over(per_from).cast("double")
-        ).alias("p_transition"),
-    )
+    return _transition_matrix(steps)
 
 
 @register(
@@ -1986,8 +1985,6 @@ GROUP BY user_id
     "(alpha = 1/2: two exact halvings + one rounded add per step).",
 )
 def stream_user_ewma_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from .streaming.ewma import streaming_ewma_disordered
 
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
@@ -2001,12 +1998,7 @@ def stream_user_ewma_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory = replay_to_memory_table(
         result, "stream_ewma_dis", "append", shuffle_partitions=16
     )
-    last = W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
-    return (
-        trajectory.withColumn("__rn", F.row_number().over(last))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "ewma", F.col("n_seen").alias("n_events"))
-    )
+    return _last_ewma_per_user(trajectory)
 
 
 # ---------------------------------------------------------------------------

@@ -16,9 +16,7 @@ The per-key fold is a scalar loop in the Python worker — a linear
 recurrence is inherently sequential, and this honesty is the operator's
 point (the batch closed-form ``Σ 0.5^(n-i)·x_i`` sums in a different
 order and is NOT bit-identical).  At scale the loop is O(events) scalar
-ops Arrow-batched per key group; the C-loop production path
-(``scipy.signal.lfilter``, same recurrence, same rounding) drops in
-behind the identical state contract when the container has scipy.
+ops Arrow-batched per key group.
 
 Equal-timestamp events never split across micro-batches here (the
 replay stages chunk on timestamp VALUE boundaries), so the in-batch
@@ -35,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .sealed import _ripe, watermark_sealed
 
 __all__ = ["streaming_ewma", "streaming_ewma_disordered", "EWMA_OUTPUT_SCHEMA"]
 
@@ -53,6 +53,33 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("n", T.LongType()),
     ]
 )
+
+
+def _fold(
+    user_id: int, ewma: float, n: int, ids: Any, vals: Any
+) -> "tuple[float, int, pd.DataFrame]":
+    """Fold ``vals`` in order into the running ``(ewma, n)`` (the first
+    observation seeds the fold); return the new carry and the per-event
+    trajectory frame."""
+    out_ids: list[int] = []
+    out_ewma: list[float] = []
+    out_n: list[int] = []
+    for eid, v in zip(ids, vals):
+        v = float(v)
+        ewma = v if n == 0 else 0.5 * v + 0.5 * ewma
+        n += 1
+        out_ids.append(int(eid))
+        out_ewma.append(ewma)
+        out_n.append(n)
+    out = pd.DataFrame(
+        {
+            "user_id": pd.array([user_id] * len(out_ids), dtype="int64"),
+            "event_id": pd.array(out_ids, dtype="int64"),
+            "ewma": pd.array(out_ewma, dtype="float64"),
+            "n_seen": pd.array(out_n, dtype="int64"),
+        }
+    )
+    return float(ewma), int(n), out
 
 
 def streaming_ewma(events: DataFrame) -> DataFrame:
@@ -85,30 +112,12 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
         if rows.empty:
             return
         rows = rows.sort_values(["ts", "event_id"])
-        if state.exists:
-            ewma, n = state.get
-            ewma, n = float(ewma), int(n)
-        else:
-            ewma, n = None, 0
-        out_ids: list[int] = []
-        out_ewma: list[float] = []
-        out_n: list[int] = []
-        for eid, v in zip(rows["event_id"], rows["value"]):
-            v = float(v)
-            ewma = v if ewma is None else 0.5 * v + 0.5 * ewma
-            n += 1
-            out_ids.append(int(eid))
-            out_ewma.append(ewma)
-            out_n.append(n)
-        state.update((float(ewma), int(n)))
-        yield pd.DataFrame(
-            {
-                "user_id": pd.array([user_id] * len(out_ids), dtype="int64"),
-                "event_id": pd.array(out_ids, dtype="int64"),
-                "ewma": pd.array(out_ewma, dtype="float64"),
-                "n_seen": pd.array(out_n, dtype="int64"),
-            }
+        ewma, n = state.get if state.exists else (0.0, 0)
+        ewma, n, out = _fold(
+            user_id, float(ewma), int(n), rows["event_id"], rows["value"]
         )
+        state.update((ewma, n))
+        yield out
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
@@ -117,20 +126,6 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-
-# Disorder-tolerant variant state: the fold result over the FINALIZED
-# prefix (exact, order-settled) plus a sorted pending buffer the
-# watermark has not yet sealed.
-_BUFFER_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ewma", T.DoubleType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("unix_us", T.ArrayType(T.LongType())),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("vals", T.ArrayType(T.DoubleType())),
-    ]
-)
 
 
 def streaming_ewma_disordered(
@@ -144,107 +139,36 @@ def streaming_ewma_disordered(
     ``(ewma, n)`` cannot be rewound, so a cross-batch straggler is folded
     AFTER values it should precede — every subsequent running value of
     that key diverges from the (ts, event_id)-ordered fold (measured in
-    ``tests/test_streaming_disorder.py``).  This variant buffers events
-    and folds an event into the carried accumulator only once the
-    watermark passes its event time — after which Spark drops any arrival
-    that could still sort at or before it.
-
-    Emission rule (deterministic, oracle-expressible): an event's
-    trajectory row is emitted iff ``epoch_ms(ts) + 1 < final watermark``;
-    the ``+1`` makes the armed timeout and the finalize predicate the
-    same (sessionizer convention).  Sealed rows carry the EXACT fold the
-    batch ``list_reduce`` oracle produces — alpha = 1/2, two exact
-    halvings + one rounded add per step, in settled global order, so the
-    hash match is bitwise.
+    ``tests/test_streaming_disorder.py``).  This variant keeps events in
+    the :mod:`.sealed` buffer and folds an event into the carried
+    ``(ewma, n)`` only once the watermark passes its event time (the
+    ``+1`` convention of :mod:`.sealed`) — after which Spark drops any
+    arrival that could still sort at or before it.  Sealed rows carry the
+    EXACT fold the batch ``list_reduce`` oracle produces — alpha = 1/2,
+    two exact halvings + one rounded add per step, in settled global
+    order, so the hash match is bitwise.
     """
-    import numpy as np
 
-    def out_df(user_id, ids, ewmas, ns):
-        return pd.DataFrame(
-            {
-                "user_id": pd.array([user_id] * len(ids), dtype="int64"),
-                "event_id": pd.array(ids, dtype="int64"),
-                "ewma": pd.array(ewmas, dtype="float64"),
-                "n_seen": pd.array(ns, dtype="int64"),
-            }
+    def seal(user_id, wm_ms, carry, us, ids, vals):
+        m, next_ms = _ripe(us // 1000, wm_ms)
+        if not m:
+            return 0, next_ms, carry, None
+        ewma, n, out = _fold(
+            user_id, float(carry[0]), int(carry[1]), ids[:m], vals[:m]
         )
+        return m, next_ms, (ewma, n), out
 
-    def finalize(ewma, n, us, ids, vals, wm_ms):
-        """Fold the ripe prefix (epoch_ms + 1 < wm_ms) into the carried
-        accumulator; return (emit lists, new_scalar_state, kept arrays,
-        next_ms or None)."""
-        ev_ms = us // 1000 + 1
-        m = int(np.searchsorted(ev_ms, wm_ms, side="left"))
-        next_ms = int(ev_ms[m]) if m < len(ev_ms) else None
-        if m == 0:
-            return None, (ewma, n), (us, ids, vals), next_ms
-        out_ids, out_ewma, out_n = [], [], []
-        for eid, v in zip(ids[:m], vals[:m]):
-            v = float(v)
-            ewma = v if n == 0 else 0.5 * v + 0.5 * ewma
-            n += 1
-            out_ids.append(int(eid))
-            out_ewma.append(ewma)
-            out_n.append(n)
-        return (
-            (out_ids, out_ewma, out_n),
-            (ewma, n),
-            (us[m:], ids[m:], vals[m:]),
-            next_ms,
-        )
-
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        wm_ms = state.getCurrentWatermarkMs()
-
-        if state.hasTimedOut:
-            ewma0, n0, us, ids, vals = state.get
-            us = np.asarray(us, dtype="int64")
-            ids = np.asarray(ids, dtype="int64")
-            vals = np.asarray(vals, dtype="float64")
-            emit, (ewma, n), (ku, ki, kv), next_ms = finalize(
-                float(ewma0), int(n0), us, ids, vals, wm_ms
-            )
-            state.update((float(ewma), int(n), ku.tolist(), ki.tolist(), kv.tolist()))
-            if next_ms is not None:
-                state.setTimeoutTimestamp(max(next_ms, wm_ms + 1))
-            if emit:
-                yield out_df(user_id, *emit)
-            return
-
-        rows = pd.concat(list(pdfs))
-        if rows.empty:
-            return
-        new_us = (
-            rows["ts"].astype("datetime64[ns]").astype("int64") // 1000
-        ).to_numpy()
-        new_ids = rows["event_id"].to_numpy(dtype="int64")
-        new_vals = rows["value"].to_numpy(dtype="float64")
-        if state.exists:
-            ewma0, n0, old_us, old_ids, old_vals = state.get
-            ewma0, n0 = float(ewma0), int(n0)
-            us = np.concatenate([np.asarray(old_us, dtype="int64"), new_us])
-            ids = np.concatenate([np.asarray(old_ids, dtype="int64"), new_ids])
-            vals = np.concatenate([np.asarray(old_vals, dtype="float64"), new_vals])
-        else:
-            ewma0, n0 = 0.0, 0
-            us, ids, vals = new_us, new_ids, new_vals
-        order = np.lexsort((ids, us))
-        us, ids, vals = us[order], ids[order], vals[order]
-        emit, (ewma, n), (ku, ki, kv), next_ms = finalize(
-            ewma0, n0, us, ids, vals, wm_ms
-        )
-        state.update((float(ewma), int(n), ku.tolist(), ki.tolist(), kv.tolist()))
-        if next_ms is not None:
-            state.setTimeoutTimestamp(max(next_ms, wm_ms + 1))
-        if emit:
-            yield out_df(user_id, *emit)
-
-    marked = events.withWatermark("ts", watermark)
-    return marked.groupBy("user_id").applyInPandasWithState(
-        fn,
+    return watermark_sealed(
+        events,
+        watermark,
         EWMA_OUTPUT_SCHEMA,
-        _BUFFER_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        carry=[("ewma", T.DoubleType(), 0.0), ("n", T.LongType(), 0)],
+        payload=[
+            (
+                "vals",
+                T.DoubleType(),
+                lambda rows: rows["value"].to_numpy(dtype="float64"),
+            )
+        ],
+        seal=seal,
     )

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .sealed import _ripe, watermark_sealed
+
 __all__ = [
     "streaming_sessionize",
     "streaming_sessionize_disordered",
@@ -68,6 +70,39 @@ _STATE_SCHEMA = T.StructType(
 _Q = 10**8  # 1e-8 quantization unit for exact value accumulation
 
 
+def _gap_runs(
+    unix: np.ndarray, vals_q: np.ndarray, gap_seconds: int
+) -> "tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]":
+    """Split sorted epoch-seconds into gap runs (a new run wherever the
+    inter-event gap exceeds ``gap_seconds``); return each run's first
+    index, start, end, event count and quantized value sum."""
+    is_new = np.empty(len(unix), dtype=bool)
+    is_new[0] = True
+    is_new[1:] = (unix[1:] - unix[:-1]) > gap_seconds
+    first = np.flatnonzero(is_new)
+    last = np.append(first[1:] - 1, len(unix) - 1)
+    counts = np.diff(np.append(first, len(unix)))
+    return first, unix[first], unix[last], counts, np.add.reduceat(vals_q, first)
+
+
+def _sessions_df(
+    user_id: int, starts: Any, lasts: Any, ns: Any, tots_q: Any
+) -> pd.DataFrame:
+    starts_a = np.asarray(starts, dtype="int64")
+    lasts_a = np.asarray(lasts, dtype="int64")
+    return pd.DataFrame(
+        {
+            "user_id": np.full(len(starts_a), user_id, dtype="int64"),
+            "session_start_unix": starts_a,
+            "session_end_unix": lasts_a,
+            "duration_s": lasts_a - starts_a,
+            "n_events": np.asarray(ns, dtype="int64"),
+            # exact int total -> one correctly-rounded double division
+            "total_value": np.asarray(tots_q, dtype="int64") / float(_Q),
+        }
+    )
+
+
 def _advance_open_session(
     unix: np.ndarray,
     vals_q: np.ndarray,
@@ -81,64 +116,32 @@ def _advance_open_session(
     carried open-session accumulator (or None), returns
     ``((closed_starts, closed_lasts, closed_ns, closed_tots), new_open)``
     — every session this batch closes, and the accumulator for the one it
-    leaves open.  All O(n) numpy (run split via gap > threshold, reduceat
-    sums), no per-row Python; factoring it keeps the operator's state
-    plumbing thin and the core unit-testable without a stream.
+    leaves open.  All O(n) numpy, no per-row Python.
     """
-    has_open = open_state is not None
-    start, last, n, tot = open_state if has_open else (0, 0, 0, 0)
-
-    is_new = np.empty(len(unix), dtype=bool)
-    is_new[1:] = (unix[1:] - unix[:-1]) > gap_seconds
-    is_new[0] = (not has_open) or (unix[0] - last > gap_seconds)
-
-    run_starts = np.flatnonzero(is_new)
-    if run_starts.size == 0 or run_starts[0] != 0:
-        run_starts = np.insert(run_starts, 0, 0)  # continuation run
-    run_last = np.append(run_starts[1:] - 1, len(unix) - 1)
-    r_start = unix[run_starts].astype("int64")
-    r_end = unix[run_last].astype("int64")
-    r_cnt = np.diff(np.append(run_starts, len(unix))).astype("int64")
-    r_sum = np.add.reduceat(vals_q, run_starts)
-
-    c_starts: list = []
-    c_lasts: list = []
-    c_ns: list = []
-    c_tots: list = []
-    if has_open:
-        if is_new[0]:
+    _, r_start, r_end, r_cnt, r_sum = _gap_runs(unix, vals_q, gap_seconds)
+    closed: list = [[], [], [], []]
+    if open_state is not None:
+        start, last, n, tot = open_state
+        if unix[0] - last > gap_seconds:
             # The batch's first event doesn't extend the open session.
-            c_starts.append(start)
-            c_lasts.append(last)
-            c_ns.append(n)
-            c_tots.append(tot)
+            closed = [[start], [last], [n], [tot]]
         else:
             # First run continues the open session from state.
             r_start[0] = start
             r_cnt[0] += n
             r_sum[0] += tot
-
     # Every run but the last is closed by the run after it.
-    if len(run_starts) > 1:
-        c_starts.extend(r_start[:-1].tolist())
-        c_lasts.extend(r_end[:-1].tolist())
-        c_ns.extend(r_cnt[:-1].tolist())
-        c_tots.extend(r_sum[:-1].tolist())
-
+    for acc, runs in zip(closed, (r_start, r_end, r_cnt, r_sum)):
+        acc.extend(runs[:-1].tolist())
     new_open = (int(r_start[-1]), int(r_end[-1]), int(r_cnt[-1]), int(r_sum[-1]))
-    return (c_starts, c_lasts, c_ns, c_tots), new_open
+    return tuple(closed), new_open
 
 
-def _batch_unix_vals(rows: pd.DataFrame) -> "tuple[np.ndarray, np.ndarray]":
-    """(epoch-seconds, half-up 1e-8-quantized values) for a sorted batch.
-    ns-normalize first: pandas may hand us datetime64[us] via Arrow."""
-    unix = (
-        rows["ts"].astype("datetime64[ns]").astype("int64") // 10**9
-    ).to_numpy()
-    vals = np.floor(
-        rows["value"].fillna(0.0).to_numpy(dtype="float64") * _Q + 0.5
+def _quantized(values: pd.Series) -> np.ndarray:
+    """Half-up 1e-8-quantized values (NULL counts as 0)."""
+    return np.floor(
+        values.fillna(0.0).to_numpy(dtype="float64") * _Q + 0.5
     ).astype("int64")
-    return unix, vals
 
 
 def streaming_sessionize(
@@ -167,23 +170,6 @@ def streaming_sessionize(
     ``session_window`` twins (``stream_session_window_*``).
     """
 
-    def sessions_df(
-        user_id: int, starts: list, lasts: list, ns: list, tots_q: list
-    ) -> pd.DataFrame:
-        starts_a = np.asarray(starts, dtype="int64")
-        lasts_a = np.asarray(lasts, dtype="int64")
-        return pd.DataFrame(
-            {
-                "user_id": np.full(len(starts_a), user_id, dtype="int64"),
-                "session_start_unix": starts_a,
-                "session_end_unix": lasts_a,
-                "duration_s": lasts_a - starts_a,
-                "n_events": np.asarray(ns, dtype="int64"),
-                # exact int total -> one correctly-rounded double division
-                "total_value": np.asarray(tots_q, dtype="int64") / float(_Q),
-            }
-        )
-
     def fn(
         key: Tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
@@ -194,7 +180,7 @@ def streaming_sessionize(
         if state.hasTimedOut:
             start, last, n, tot = state.get
             state.remove()
-            yield sessions_df(user_id, [start], [last], [n], [tot])
+            yield _sessions_df(user_id, [start], [last], [n], [tot])
             return
 
         rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
@@ -206,10 +192,13 @@ def streaming_sessionize(
                     max((last + gap_seconds) * 1000 + 1, wm0 + 1)
                 )
             return
-        unix, vals = _batch_unix_vals(rows)
+        # ns-normalize first: pandas may hand us datetime64[us] via Arrow.
+        unix = (
+            rows["ts"].astype("datetime64[ns]").astype("int64") // 10**9
+        ).to_numpy()
         open_state = tuple(state.get) if state.exists else None
-        (c_starts, c_lasts, c_ns, c_tots), new_open = _advance_open_session(
-            unix, vals, open_state, gap_seconds
+        closed, new_open = _advance_open_session(
+            unix, _quantized(rows["value"]), open_state, gap_seconds
         )
 
         # The final run stays open in state, flushed by event-time timeout
@@ -219,8 +208,8 @@ def streaming_sessionize(
         state.setTimeoutTimestamp(
             max((new_open[1] + gap_seconds) * 1000 + 1, wm + 1)
         )
-        if c_starts:
-            yield sessions_df(user_id, c_starts, c_lasts, c_ns, c_tots)
+        if closed[0]:
+            yield _sessions_df(user_id, *closed)
 
     marked = events.withWatermark("ts", watermark)
     return marked.groupBy("user_id").applyInPandasWithState(
@@ -230,18 +219,6 @@ def streaming_sessionize(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# Pending-event buffer state for the disorder-tolerant variant: ALL
-# unfinalized events of the key inside the watermark horizon, not a
-# fixed-width accumulator.  O(events within horizon) per key — the same
-# state/disorder tradeoff Spark's built-in session_window makes.
-_BUFFER_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("unix", T.ArrayType(T.LongType())),
-        T.StructField("vals_q", T.ArrayType(T.LongType())),
-    ]
-)
 
 
 def streaming_sessionize_disordered(
@@ -259,136 +236,39 @@ def streaming_sessionize_disordered(
     than the carried ``last`` cannot be placed against compressed state
     (round-8 displaced-replay audit: 35/904 corrupted sessions at 10%
     displacement).  This variant keeps every not-yet-finalized event in
-    state instead; a session is emitted only when the WATERMARK passes
-    ``last_event + gap``, at which point no future row can extend or
-    split it (Spark drops sub-watermark input before the operator sees
-    it).  Sessions finalize oldest-first (run ends are monotone within a
-    key, so finalization is a prefix property of the sorted buffer).
+    the :mod:`.sealed` buffer instead; a gap run is emitted only when the
+    watermark passes ``last_event + gap`` (the ``+1`` convention of
+    :mod:`.sealed`), at which point no future row can extend or split it
+    (Spark drops sub-watermark input before the operator sees it).  Run
+    ends are monotone within a key, so sealing is a prefix property of
+    the sorted buffer; the timeout is armed for the FIRST unsealed run, so
+    a watermark parked between two runs still seals the earlier one.
 
-    State is O(events inside the watermark horizon) per key — bounded by
-    the watermark, not the stream; the in-order operator's O(1) state is
-    the reward for the stronger delivery contract, this operator's
-    correctness-under-disorder is the reward for the bigger state.  On
-    in-order input it agrees with :func:`streaming_sessionize` wherever
-    both emit, but because it finalizes ONLY via the watermark (never via
-    an in-batch split), sessions the watermark has not yet passed are
-    withheld — its bounded-replay output is a prefix-subset of the O(1)
-    operator's (pinned by ``test_disordered_sessionizer_matches_inorder_
-    operator_on_ordered_input``).
+    On in-order input it agrees with :func:`streaming_sessionize`
+    wherever both emit, but because it finalizes ONLY via the watermark
+    (never via an in-batch split), sessions the watermark has not yet
+    passed are withheld — its bounded-replay output is a prefix-subset of
+    the O(1) operator's (pinned by ``test_disordered_sessionizer_matches_
+    inorder_operator_on_ordered_input``).
     """
-
-    def sessions_df(user_id, starts, lasts, ns, tots_q) -> pd.DataFrame:
-        starts_a = np.asarray(starts, dtype="int64")
-        lasts_a = np.asarray(lasts, dtype="int64")
-        return pd.DataFrame(
-            {
-                "user_id": np.full(len(starts_a), user_id, dtype="int64"),
-                "session_start_unix": starts_a,
-                "session_end_unix": lasts_a,
-                "duration_s": lasts_a - starts_a,
-                "n_events": np.asarray(ns, dtype="int64"),
-                "total_value": np.asarray(tots_q, dtype="int64") / float(_Q),
-            }
+    def seal(user_id, wm_ms, carry, us, ids, vals_q):
+        first, starts, ends, counts, sums = _gap_runs(
+            us // 10**6, vals_q, gap_seconds
         )
-
-    def finalize(unix, vals, wm_ms):
-        """Split the sorted buffer into gap runs; emit the prefix of runs
-        whose ``(last + gap) * 1000 + 1 < wm_ms``; return (emit_lists,
-        kept arrays, first pending run's end).  The comparison is against
-        the UN-floored ms watermark: flooring to seconds would mean a
-        timeout firing with the watermark inside
-        ``((last+gap)*1000, (last+gap+1)*1000]`` finalizes nothing and
-        re-arms — and if the watermark never advances again (end of a
-        bounded replay) the session would be withheld forever even though
-        the timeout predicate was met.  The ``+1`` matches the armed
-        timeout timestamp ``(end+gap)*1000 + 1`` exactly, so "the timeout
-        fires" and "finalize emits the run" are the SAME predicate — the
-        emitted set on a bounded replay is deterministically
-        ``{runs: (end+gap)*1000+1 < final watermark}``, which is what the
-        registered query's oracle selects."""
-        is_new = np.empty(len(unix), dtype=bool)
-        is_new[0] = True
-        is_new[1:] = (unix[1:] - unix[:-1]) > gap_seconds
-        run_starts = np.flatnonzero(is_new)
-        run_last_idx = np.append(run_starts[1:] - 1, len(unix) - 1)
-        r_start = unix[run_starts]
-        r_end = unix[run_last_idx]
-        n_final = int(
-            np.searchsorted((r_end + gap_seconds) * 1000 + 1, wm_ms, side="left")
+        m, next_ms = _ripe((ends + gap_seconds) * 1000, wm_ms)
+        keep_from = int(first[m]) if m < len(first) else len(us)
+        out = (
+            _sessions_df(user_id, starts[:m], ends[:m], counts[:m], sums[:m])
+            if m
+            else None
         )
-        # Timeout basis = the FIRST unfinalized run's end: arming at the
-        # last buffered event's end+gap would withhold an earlier run the
-        # watermark has already passed if the watermark parks between the
-        # two (bounded replay).  Timeouts cascade: each fire finalizes the
-        # ripe prefix and re-arms at the new first pending run.
-        next_end = int(r_end[n_final]) if n_final < len(r_end) else None
-        if n_final == 0:
-            return None, (unix, vals), next_end
-        r_cnt = np.diff(np.append(run_starts, len(unix)))
-        r_sum = np.add.reduceat(vals, run_starts)
-        emit = (
-            r_start[:n_final].tolist(),
-            r_end[:n_final].tolist(),
-            r_cnt[:n_final].tolist(),
-            r_sum[:n_final].tolist(),
-        )
-        keep_from = int(run_starts[n_final]) if n_final < len(run_starts) else len(unix)
-        return emit, (unix[keep_from:], vals[keep_from:]), next_end
+        return keep_from, next_ms, carry, out
 
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        wm_ms = state.getCurrentWatermarkMs()
-
-        if state.hasTimedOut:
-            unix, vals = (np.asarray(a, dtype="int64") for a in state.get)
-            emit, (ku, kv), next_end = finalize(unix, vals, wm_ms)
-            if len(ku):
-                state.update((ku.tolist(), kv.tolist()))
-                # clamp past the watermark: a timeout <= the current
-                # watermark is rejected by the state API.
-                state.setTimeoutTimestamp(
-                    max(
-                        (next_end + gap_seconds) * 1000 + 1,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-            else:
-                state.remove()
-            if emit:
-                yield sessions_df(user_id, *emit)
-            return
-
-        rows = pd.concat(list(pdfs))
-        new_unix, new_vals = _batch_unix_vals(rows.sort_values(["ts", "event_id"]))
-        if state.exists:
-            old_u, old_v = (np.asarray(a, dtype="int64") for a in state.get)
-            unix = np.concatenate([old_u, new_unix])
-            vals = np.concatenate([old_v, new_vals])
-            order = np.argsort(unix, kind="stable")
-            unix, vals = unix[order], vals[order]
-        else:
-            unix, vals = new_unix, new_vals
-        if not len(unix):
-            return
-        emit, (ku, kv), next_end = finalize(unix, vals, wm_ms)
-        if len(ku):
-            state.update((ku.tolist(), kv.tolist()))
-            state.setTimeoutTimestamp(
-                max(
-                    (next_end + gap_seconds) * 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        else:
-            state.remove()
-        if emit:
-            yield sessions_df(user_id, *emit)
-
-    marked = events.withWatermark("ts", watermark)
-    return marked.groupBy("user_id").applyInPandasWithState(
-        fn,
+    return watermark_sealed(
+        events,
+        watermark,
         SESSION_OUTPUT_SCHEMA,
-        _BUFFER_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        carry=[],
+        payload=[("vals_q", T.LongType(), lambda rows: _quantized(rows["value"]))],
+        seal=seal,
     )

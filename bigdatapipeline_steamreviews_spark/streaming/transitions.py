@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .sealed import _ripe, watermark_sealed
+
 __all__ = [
     "streaming_transitions",
     "streaming_transitions_disordered",
@@ -51,6 +53,16 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("last_type", T.StringType()),
     ]
 )
+
+
+def _steps_df(user_id: int, froms: Any, tos: Any) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "user_id": pd.array([user_id] * len(froms), dtype="int64"),
+            "from_state": froms,
+            "to_state": tos,
+        }
+    )
 
 
 def streaming_transitions(events: DataFrame) -> DataFrame:
@@ -98,13 +110,7 @@ def streaming_transitions(events: DataFrame) -> DataFrame:
             (int(unix_us[-1]), int(rows["event_id"].iloc[-1]), types[-1])
         )
         if froms:
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.array([user_id] * len(froms), dtype="int64"),
-                    "from_state": froms,
-                    "to_state": tos,
-                }
-            )
+            yield _steps_df(user_id, froms, tos)
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
@@ -113,19 +119,6 @@ def streaming_transitions(events: DataFrame) -> DataFrame:
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-
-# Pending-event buffer for the disorder-tolerant variant: every event of
-# the key whose transition pair the watermark has not yet sealed, sorted
-# by (ts, event_id).  O(events within horizon) per key — the same
-# state/disorder tradeoff as streaming_sessionize_disordered.
-_BUFFER_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("unix_us", T.ArrayType(T.LongType())),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("types", T.ArrayType(T.StringType())),
-    ]
-)
 
 
 def streaming_transitions_disordered(
@@ -140,109 +133,31 @@ def streaming_transitions_disordered(
     cross-batch straggler is lagged against the WRONG neighbor — both the
     pair it should have split and the pair it fabricates are corrupted
     (measured in ``tests/test_streaming_disorder.py``).  This variant
-    buffers events instead and seals the pair ``(e_i, e_{i+1})`` only
-    when the watermark passes ``e_{i+1}``'s event time — after which
-    Spark drops any arrival that could still sort at or before
-    ``e_{i+1}`` before the operator sees it.
-
-    Emission rule (deterministic, oracle-expressible): a pair is emitted
-    iff ``epoch_ms(to_event.ts) + 1 < final watermark`` — the ``+1``
-    makes the armed timeout timestamp and the finalize predicate
-    identical, so fire and emit never disagree (same convention as
-    :func:`..sessions.streaming_sessionize_disordered`).  The last
-    emitted "to" event stays in the buffer as the next pair's lag
-    partner, exactly like the fixed-width twin's carried state row.
+    keeps events in the :mod:`.sealed` buffer instead and seals the pair
+    ``(e_i, e_{i+1})`` only when the watermark passes ``e_{i+1}``'s event
+    time (the ``+1`` convention of :mod:`.sealed`) — after which Spark
+    drops any arrival that could still sort at or before ``e_{i+1}``
+    before the operator sees it.  The last sealed "to" event (or the sole
+    event) stays in the buffer as the next pair's lag partner, exactly
+    like the fixed-width twin's carried state row, so the buffer never
+    drains.
     """
-    import numpy as np
+    def seal(user_id, wm_ms, carry, us, ids, types):
+        m, next_ms = _ripe(us[1:] // 1000, wm_ms)
+        out = _steps_df(user_id, types[:m], types[1 : m + 1]) if m else None
+        return m, next_ms, carry, out
 
-    def finalize(us, ids, types, wm_ms):
-        """Seal the ripe prefix of pairs; return (emit_from, emit_to,
-        keep_slice_start, next_to_ms or None).  Pair i (1-based "to"
-        index) is ripe iff us[i]//1000 + 1 < wm_ms; ripeness is a prefix
-        property of the sorted buffer."""
-        if len(us) < 2:
-            return [], [], 0, None
-        to_ms = us[1:] // 1000 + 1
-        m = int(np.searchsorted(to_ms, wm_ms, side="left"))
-        next_to_ms = int(to_ms[m]) if m < len(to_ms) else None
-        if m == 0:
-            return [], [], 0, next_to_ms
-        return list(types[:m]), list(types[1 : m + 1]), m, next_to_ms
-
-    def steps_df(user_id, froms, tos):
-        return pd.DataFrame(
-            {
-                "user_id": pd.array([user_id] * len(froms), dtype="int64"),
-                "from_state": froms,
-                "to_state": tos,
-            }
-        )
-
-    def fn(key, pdfs, state: GroupState):
-        import numpy as np
-
-        (user_id,) = key
-        wm_ms = state.getCurrentWatermarkMs()
-
-        if state.hasTimedOut:
-            us, ids, types = (np.asarray(a) for a in state.get)
-            us = us.astype("int64")
-            ids = ids.astype("int64")
-            froms, tos, keep_from, next_to_ms = finalize(us, ids, types, wm_ms)
-            state.update(
-                (
-                    us[keep_from:].tolist(),
-                    ids[keep_from:].tolist(),
-                    types[keep_from:].tolist(),
-                )
-            )
-            if next_to_ms is not None:
-                state.setTimeoutTimestamp(max(next_to_ms, wm_ms + 1))
-            if froms:
-                yield steps_df(user_id, froms, tos)
-            return
-
-        rows = pd.concat(list(pdfs))
-        if rows.empty:
-            return
-        new_us = (
-            rows["ts"].astype("datetime64[ns]").astype("int64") // 1000
-        ).to_numpy()
-        new_ids = rows["event_id"].to_numpy(dtype="int64")
-        new_types = rows["event_type"].to_numpy(dtype=object)
-        if state.exists:
-            old_us, old_ids, old_types = state.get
-            us = np.concatenate([np.asarray(old_us, dtype="int64"), new_us])
-            ids = np.concatenate([np.asarray(old_ids, dtype="int64"), new_ids])
-            types = np.concatenate(
-                [np.asarray(old_types, dtype=object), new_types]
-            )
-        else:
-            us, ids, types = new_us, new_ids, new_types
-        order = np.lexsort((ids, us))
-        us, ids, types = us[order], ids[order], types[order]
-        froms, tos, keep_from, next_to_ms = finalize(us, ids, types, wm_ms)
-        # The buffer is never fully drained: the last sealed "to" event
-        # (or the sole event) remains as the next pair's lag partner —
-        # the disordered analogue of the fixed-width twin keeping its
-        # state row forever.
-        state.update(
-            (
-                us[keep_from:].tolist(),
-                ids[keep_from:].tolist(),
-                types[keep_from:].tolist(),
-            )
-        )
-        if next_to_ms is not None:
-            state.setTimeoutTimestamp(max(next_to_ms, wm_ms + 1))
-        if froms:
-            yield steps_df(user_id, froms, tos)
-
-    marked = events.withWatermark("ts", watermark)
-    return marked.groupBy("user_id").applyInPandasWithState(
-        fn,
+    return watermark_sealed(
+        events,
+        watermark,
         TRANSITION_OUTPUT_SCHEMA,
-        _BUFFER_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        carry=[],
+        payload=[
+            (
+                "types",
+                T.StringType(),
+                lambda rows: rows["event_type"].to_numpy(dtype=object),
+            )
+        ],
+        seal=seal,
     )

@@ -9,9 +9,13 @@ from __future__ import annotations
 import pytest
 
 from bigdatapipeline_steamreviews_spark.operators.analytic import session_stats
+from bigdatapipeline_steamreviews_spark.queries_streaming import (
+    _stage_events_chunks_displaced,
+)
 from bigdatapipeline_steamreviews_spark.sources.tables import load_table
 from bigdatapipeline_steamreviews_spark.streaming.sessions import (
     streaming_sessionize,
+    streaming_sessionize_disordered,
 )
 from bigdatapipeline_steamreviews_spark.streaming.summarizer import (
     events_file_stream,
@@ -335,54 +339,13 @@ def test_advance_open_session_core_is_shared_and_pure():
 # Round-8 disorder audit: the ordering contract and its tolerant twin
 # ---------------------------------------------------------------------------
 
-import tempfile
-import time as _time
-
-from pyspark.sql import functions as F
-from pyspark.sql import Window as W
-
-from bigdatapipeline_steamreviews_spark.sources.tables import event_ts_micros
-from bigdatapipeline_steamreviews_spark.streaming.sessions import (
-    streaming_sessionize_disordered,
-)
-from bigdatapipeline_steamreviews_spark.streaming.summarizer import (
-    events_file_stream,
-)
-
 
 @pytest.fixture(scope="module")
 def displaced_stage(spark):
-    """4 time-chunk replay files where a content-hash-selected 10% of
-    events ARRIVE one chunk late (event time unchanged) — per-key
-    event-time order broken ACROSS micro-batches."""
-    raw = event_ts_micros(spark.read.parquet(f"{SF_DIR}/events.parquet"))
-    n = raw.count()
-    chunks = 4
-    ranked = raw.withColumn(
-        "__chunk",
-        F.least(
-            F.lit(chunks - 1),
-            F.floor(
-                F.row_number().over(W.orderBy("ts", "event_id")) * chunks / (n + 1)
-            ).cast("int"),
-        ),
-    )
-    late = F.pmod(F.xxhash64(F.lit("late"), F.col("event_id")), F.lit(10)) == 0
-    staged = ranked.withColumn(
-        "__arr",
-        F.when(late, F.least(F.col("__chunk") + 1, F.lit(chunks - 1))).otherwise(
-            F.col("__chunk")
-        ),
-    )
-    stage = tempfile.mkdtemp(prefix="sess_displaced_")
-    for i in range(chunks):
-        staged.filter(F.col("__arr") == i).drop("__chunk", "__arr").coalesce(
-            1
-        ).write.mode("append").parquet(stage)
-        _time.sleep(0.05)
-    lo, hi = raw.agg(F.min("ts"), F.max("ts")).collect()[0]
-    span_days = (hi - lo) / 86_400_000_000
-    return stage, int(span_days / 2) + 2
+    """The shared registry staging: 4 time-chunk replay files where a
+    content-hash-selected 10% of events ARRIVE one chunk late (event time
+    unchanged) — per-key event-time order broken ACROSS micro-batches."""
+    return _stage_events_chunks_displaced(spark, SF_DIR)
 
 
 def _batch_sessions(spark):
@@ -398,7 +361,9 @@ def _batch_sessions(spark):
     }
 
 
-def test_fixed_width_sessionizer_requires_inorder_delivery(spark, displaced_stage):
+def test_fixed_width_sessionizer_requires_inorder_delivery(
+    spark, displaced_stage, tmp_path
+):
     """The ordering contract is REAL, not theoretical: under cross-batch
     disorder the O(1)-state operator diverges from batch (a straggler
     older than the carried `last` cannot be placed against compressed
@@ -409,7 +374,7 @@ def test_fixed_width_sessionizer_requires_inorder_delivery(spark, displaced_stag
     stream = events_file_stream(spark, stage, max_files_per_trigger=1)
     result = streaming_sessionize(stream, gap_seconds=GAP, watermark="365 days")
     got = run_to_memory_table(
-        result, "sess_contract", tempfile.mkdtemp(prefix="ck_"), "append"
+        result, "sess_contract", str(tmp_path / "ck"), "append"
     ).collect()
     batch = _batch_sessions(spark)
     diverged = sum(
@@ -421,7 +386,9 @@ def test_fixed_width_sessionizer_requires_inorder_delivery(spark, displaced_stag
     assert diverged > 0
 
 
-def test_disordered_sessionizer_is_exact_under_displacement(spark, displaced_stage):
+def test_disordered_sessionizer_is_exact_under_displacement(
+    spark, displaced_stage, tmp_path
+):
     """The buffered twin's whole point: with the watermark sized past the
     displacement, every session it finalizes under disorder is the exact
     batch session — bitwise totals included — and no phantom sessions
@@ -432,7 +399,7 @@ def test_disordered_sessionizer_is_exact_under_displacement(spark, displaced_sta
         stream, gap_seconds=GAP, watermark=f"{delay_days} days"
     )
     got = run_to_memory_table(
-        result, "sess_disordered", tempfile.mkdtemp(prefix="ck_"), "append"
+        result, "sess_disordered", str(tmp_path / "ck"), "append"
     ).collect()
     batch = _batch_sessions(spark)
     assert len(got) > 0
